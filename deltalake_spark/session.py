@@ -18,6 +18,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def physical_gib() -> int:
+    """Physical RAM of this machine in whole GiB, 0 when unknown."""
+    try:
+        return (os.sysconf("SC_PHYS_PAGES")
+                * os.sysconf("SC_PAGE_SIZE")) // (1024 ** 3)
+    except (ValueError, OSError, AttributeError):
+        return 0
+
+
+def default_driver_memory(cores: int, phys_gib: int) -> str:
+    """Local-mode driver heap for ``cores`` task slots on a machine with
+    ``phys_gib`` GiB of RAM, as a ``spark.driver.memory`` value; unknown
+    RAM (0) gives the 8g floor.
+
+    In local[N] the ONE driver JVM holds every executor thread's
+    execution memory, so a fixed 8g heap at N=32 leaves ~150 MB of
+    execution memory per concurrent task and the session spends its
+    time in GC — measured 2-5x wall inflation on the TPC-H headline
+    gates (q5 10.2 s → 1.8 s at sf0.1 after resizing). Rule: ~1 GB per
+    core, bounded by a quarter of machine RAM, floor at 8 GB,
+    capped at 31 GB because HotSpot turns compressed oops off at heaps
+    of 32 GB and above (every object reference doubles in size).
+    """
+    return f"{min(31, max(8, min(cores, phys_gib // 4)))}g"
+
+
 def get_spark(
     app_name: str = "deltalake-spark",
     *,
@@ -32,25 +58,12 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
 
-    # Local-mode heap sizing (guide §5): in local[N] the ONE driver JVM
-    # holds every executor thread's execution memory, so a fixed 8g
-    # heap at N=32 leaves ~150 MB of execution memory per concurrent
-    # task and the session spends its time in GC — measured 2-5x wall
-    # inflation on the TPC-H headline gates (q5 10.2 s → 1.8 s at
-    # sf0.1 after resizing). Default: ~1 GB per core, bounded by a
-    # quarter of machine RAM, floor at the old 8 GB. SPARK_DRIVER_MEM
-    # still overrides; on a real cluster the driver does no data work
-    # and executors size their own heaps (spark.executor.memory), so
-    # this default only governs local mode.
-    mem = os.environ.get("SPARK_DRIVER_MEM")
-    if not mem:
-        try:
-            total_gb = (os.sysconf("SC_PHYS_PAGES")
-                        * os.sysconf("SC_PAGE_SIZE")) // (1024 ** 3)
-        except (ValueError, OSError, AttributeError):
-            total_gb = 0
-        n = cpus or (os.cpu_count() or 8)
-        mem = f"{max(8, min(n, total_gb // 4)) if total_gb else 8}g"
+    # Local-mode heap sizing (guide §5, see default_driver_memory).
+    # SPARK_DRIVER_MEM overrides; on a real cluster the driver does no
+    # data work and executors size their own heaps
+    # (spark.executor.memory), so this default only governs local mode.
+    mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(
+        cpus or os.cpu_count() or 8, physical_gib())
 
     builder = (
         SparkSession.builder.appName(app_name)

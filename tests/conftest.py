@@ -11,19 +11,19 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from deltalake_spark.session import get_spark
 
-    # fixed memory envelope (r6 verdict ask #6): the 400k-row dbscan/CC
-    # volume smokes need real heap headroom, and the suite must not
-    # depend on machine solitude — a co-tenant Spark JVM holding half
-    # the box OOM'd exactly one test in r6. 16g is ~1/8 of the box:
-    # enough for the smokes, small enough to coexist with another
-    # full-size JVM. Env-overridable for smaller machines.
+    # Heap: get_spark's machine-derived default (~1 GB per core, at most
+    # a quarter of RAM, floor 8g, cap 31g; session.default_driver_memory),
+    # so the suite and the engine size the heap in one place. The old
+    # fixed 16g pin assumed a ~128 GB box ("~1/8 of the box"); on a 16 GB
+    # box it is more heap than RAM, and the kernel OOM-killed the test
+    # JVM midway through the volume smokes, failing every later Spark
+    # test. SPARK_GRAFT_TEST_DRIVER_MEM overrides for the test session
+    # alone, SPARK_DRIVER_MEM for every session.
+    mem = os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
     spark = get_spark(
         "deltalake-spark-tests",
         shuffle_partitions=8,
-        extra_conf={
-            "spark.driver.memory":
-                os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM", "16g"),
-        },
+        extra_conf={"spark.driver.memory": mem} if mem else None,
     )
     yield spark
 

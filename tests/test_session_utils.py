@@ -4,9 +4,16 @@ inputs and independent of the session timezone (the driver constructs
 its own SparkSession; a tz-sensitive conversion would silently shift
 every event time by the host offset)."""
 
-import pyspark.sql.functions as F
+import os
 
-from deltalake_spark.session import ts_to_long_nanos
+import pyspark.sql.functions as F
+import pytest
+
+from deltalake_spark.session import (
+    default_driver_memory,
+    physical_gib,
+    ts_to_long_nanos,
+)
 
 
 def test_long_passthrough(spark):
@@ -65,3 +72,26 @@ def test_repeated_gate_queries_do_not_leak_temp_views(spark, sf_dir):
     for _ in range(3):
         q(spark, sf_dir).collect()
     assert len(spark.catalog.listTables()) == before
+
+
+@pytest.mark.parametrize("cores, phys_gib, want", [
+    (4, 15, "8g"),     # quarter of RAM is 3: the 8g floor binds
+    (16, 64, "16g"),   # 1 GB per core
+    (32, 125, "31g"),  # quarter of RAM (31) binds
+    (64, 251, "31g"),  # quarter is 62: capped below compressed-oops limit
+    (4, 0, "8g"),      # RAM unknown
+])
+def test_default_driver_memory_rule(cores, phys_gib, want):
+    assert default_driver_memory(cores, phys_gib) == want
+
+
+def test_test_session_heap_is_machine_derived(spark):
+    """The test JVM's heap comes from the same machine-derived rule as
+    every other session; a fixed pin in the fixture fails here instead
+    of getting the JVM OOM-killed on a box smaller than the pin."""
+    slots = spark.sparkContext.master[len("local["):-1]
+    cores = (os.cpu_count() or 8) if slots == "*" else int(slots)
+    want = (os.environ.get("SPARK_GRAFT_TEST_DRIVER_MEM")
+            or os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(cores, physical_gib()))
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
