@@ -149,36 +149,6 @@ def word_shingle_hashes(text_col: Column, k: int = 3) -> Column:
     return combined
 
 
-def minhash_signature(text_col: Column, *, num_hashes: int = 64,
-                      shingle_size: int = 5, seed: int = 42,
-                      shingle_mode: str = "word") -> Column:
-    """MinHash signature as array<long> of length ``num_hashes``.
-
-    shingle → hash → per-permutation (a*h+b) mod p → running min.
-    All array expressions run inside codegen; cost is O(shingles×hashes)
-    per row with zero shuffle. ``shingle_mode='word'`` (default) hashes
-    3-word grams arithmetically (fast path); ``'char'`` builds classic
-    character shingles of ``shingle_size``.
-    """
-    params = _hash_params(num_hashes, seed)
-    if shingle_mode == "word":
-        shingles = F.array_distinct(word_shingle_hashes(text_col, 3))
-    else:
-        shingles = F.array_distinct(char_shingles(text_col, shingle_size))
-
-    # Single-pass fold: one traversal of the shingle array computes all
-    # permutation minima. N.B. per-permutation array_min(transform(base))
-    # would make Catalyst's project-collapse duplicate the shingle+hash
-    # expression num_hashes times (measured 25x slower at sf0.1).
-    def step(acc: Column, s: Column) -> Column:
-        h = F.abs(F.hash(s)).cast("long")
-        cands = F.array(*[(h * a + b) % _PRIME for a, b in params])
-        return F.zip_with(acc, cands, lambda x, y: F.least(x, y))
-
-    init = F.array_repeat(F.lit(_PRIME).cast("long"), num_hashes)
-    return F.aggregate(shingles, init, step)
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     *,
@@ -288,27 +258,32 @@ def minhash_band_keys(
             F.col(id_col).alias("__id"),
             F.explode(F.array_distinct(sh)).alias("__sh"),
         ).select("__id", F.abs(F.hash("__sh")).cast("long").alias("__h"))
+    # The minima and the band structs are built from SQL text: one
+    # parsed expression per aggregate and one for the band explode,
+    # instead of one py4j round-trip per Column op (~3,300 of them at
+    # 32 hashes / 8 bands, 0.45-0.65 s of driver build per call on a
+    # 4-core box). The expressions are the ones the Column API built,
+    # so keys are bit-identical (golden checksums in
+    # tests/test_minhash_index.py).
     with_sig = exploded_sh.groupBy("__id").agg(*[
-        F.min((F.col("__h") * a + b) % _PRIME).alias(f"__m{i}")
+        F.expr(f"min((__h * {a} + {b}) % {_PRIME}) AS __m{i}")
         for i, (a, b) in enumerate(params)
     ])
 
-    def _band_hash(b: int) -> Column:
-        cols = [F.col(f"__m{i}")
-                for i in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        if hash_mode == "portable":
-            return portable_hash60(F.concat_ws("|", *cols))
-        return F.hash(*cols).cast("long")
+    def _band_hash(b: int) -> str:
+        cols = ", ".join(
+            f"__m{i}"
+            for i in range(b * rows_per_band, (b + 1) * rows_per_band))
+        if hash_mode == "portable":  # portable_hash60 of the concat
+            return (f"CAST(conv(substring(md5(concat_ws('|', {cols})), "
+                    f"1, 15), 16, 10) AS BIGINT)")
+        return f"CAST(hash({cols}) AS BIGINT)"
 
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            _band_hash(b).alias("band_hash"),
-        )
-        for b in range(bands)
-    ])
-    return with_sig.select(
-        "__id", F.explode(band_structs).alias("bb")
+    band_structs = ", ".join(
+        f"named_struct('band', {b}, 'band_hash', {_band_hash(b)})"
+        for b in range(bands))
+    return with_sig.selectExpr(
+        "__id", f"explode(array({band_structs})) AS bb"
     ).select(F.col("__id").alias(id_col), "bb.band", "bb.band_hash")
 
 
@@ -408,6 +383,7 @@ def minhash_dedup_incremental(
     hash_mode: str = "native",
     max_bucket: int = 1000,
     min_shared_bands: int = 1,
+    batch_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup a new batch against a PERSISTED fingerprint index — the
     nightly-ingest shape: signatures are computed for the BATCH ONLY;
@@ -439,6 +415,12 @@ def minhash_dedup_incremental(
     ``index`` may be a DeltaTable (parameters are validated against
     the pinned ones — mismatched signatures fail loud) or a raw
     DataFrame of keys (caller owns compatibility).
+
+    ``batch_keys`` takes the batch's band keys when the caller already
+    derived them (``minhash_band_keys(batch, ...)`` under the same
+    parameters): the streaming sink pins them once per trigger and
+    reuses them for its index append, so the probe does not derive
+    them a second time.
     """
     idx_df = index
     if hasattr(index, "to_df"):  # DeltaTable duck-type
@@ -466,11 +448,13 @@ def minhash_dedup_incremental(
         .select("band", "band_hash")
     )
     idx_keys = idx_keys.join(ok_buckets, ["band", "band_hash"], "left_semi")
-    bkeys = minhash_band_keys(
-        batch, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-        bands=bands, shingle_size=shingle_size, seed=seed,
-        shingle_mode=shingle_mode, hash_mode=hash_mode,
-    ).withColumnRenamed(id_col, "__bid")
+    if batch_keys is None:
+        batch_keys = minhash_band_keys(
+            batch, id_col=id_col, text_col=text_col,
+            num_hashes=num_hashes, bands=bands, shingle_size=shingle_size,
+            seed=seed, shingle_mode=shingle_mode, hash_mode=hash_mode,
+        )
+    bkeys = batch_keys.withColumnRenamed(id_col, "__bid")
     pairs = (
         bkeys.join(idx_keys, ["band", "band_hash"])
         .groupBy("__bid", "__cand")

@@ -138,6 +138,7 @@ def minhash_stream_dedup_sink(
         minhash_band_keys,
         minhash_dedup_incremental,
     )
+    from deltalake_spark.operators.iterative import _release_local_checkpoint
 
     params = _minhash_index_params(
         num_hashes=num_hashes, bands=bands, shingle_size=shingle_size,
@@ -157,28 +158,40 @@ def minhash_stream_dedup_sink(
     index_app = app_id + "-index"
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ids = batch_df.select(F.col(id_col))
-        idx_df = index.to_df().join(ids, id_col, "left_anti")
-        res = minhash_dedup_incremental(
-            batch_df, idx_df, max_bucket=max_bucket, **kw,
-        ).localCheckpoint(eager=True)  # pin: written twice below
-        if batch_id > index.last_txn_version(index_app):
-            kept = batch_df.join(
-                res.filter("is_new").select(id_col), id_col, "left_semi")
-            index.write(
-                minhash_band_keys(kept, **kw),
-                partition_by=["band"],
-                _extra_actions=[{
-                    "txn": {"appId": index_app, "version": int(batch_id)}
-                }],
-            )
-        if batch_id > decisions.last_txn_version(app_id):
-            decisions.write(
-                res,
-                _extra_actions=[{
-                    "txn": {"appId": app_id, "version": int(batch_id)}
-                }],
-            )
+        # two pins, both released when the trigger ends: the batch's
+        # band keys (derived once, read by the probe AND the index
+        # append) and the decisions (read by both writes below)
+        bkeys = res = None
+        try:
+            bkeys = minhash_band_keys(batch_df, **kw).localCheckpoint(
+                eager=True)
+            ids = batch_df.select(F.col(id_col))
+            idx_df = index.to_df().join(ids, id_col, "left_anti")
+            res = minhash_dedup_incremental(
+                batch_df, idx_df, max_bucket=max_bucket, batch_keys=bkeys,
+                **kw,
+            ).localCheckpoint(eager=True)
+            if batch_id > index.last_txn_version(index_app):
+                kept = res.filter("is_new").select(id_col)
+                index.write(
+                    bkeys.join(kept, id_col, "left_semi"),
+                    partition_by=["band"],
+                    _extra_actions=[{
+                        "txn": {"appId": index_app,
+                                "version": int(batch_id)}
+                    }],
+                )
+            if batch_id > decisions.last_txn_version(app_id):
+                decisions.write(
+                    res,
+                    _extra_actions=[{
+                        "txn": {"appId": app_id, "version": int(batch_id)}
+                    }],
+                )
+        finally:
+            for pinned in (res, bkeys):
+                if pinned is not None:
+                    _release_local_checkpoint(pinned)
 
     writer = stream.writeStream.foreachBatch(process)
     if checkpoint_dir:

@@ -154,6 +154,55 @@ def test_max_bucket_drops_boilerplate(spark):
     assert dropped["is_new"] is True  # hot buckets skipped entirely
 
 
+# Band keys of a fixed corpus per (shingle_mode, hash_mode): row count
+# and sha256 of the sorted "id,band,band_hash" lines. Taken from the
+# Column-API build of minhash_band_keys; the SQL-text build must
+# reproduce them bit for bit. Covers short docs, whitespace runs,
+# non-ASCII text, an empty string and a NULL text.
+GOLDEN_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, "two words"),
+    (4, "single"),
+    (5, "  leading and trailing   whitespace  runs  "),
+    (6, "caf\u00e9 na\u00efve r\u00e9sum\u00e9 \u2014 unicode text "
+        "\u00fcber alles"),
+    (7, ""),
+    (8, None),
+    (9, BASE),
+    (10, BASE),
+]
+GOLDEN_KEYS = {
+    ("word", "portable"): (
+        72, "bded3017e6e08a59b5400ba587308c18"
+            "a8335d8d039fc863620f00235091599d"),
+    ("word", "native"): (
+        72, "4aa7baea53c6503d21cd6396dd88aa1f"
+            "3e50cd1052ade4c0c049c3014eaa7541"),
+    ("char", "native"): (
+        80, "cd5ac3aa8a1f0da61b8e0b92bf65964072623b4f"
+            "8278202c440ba16c8ab9fb6e"),
+}
+
+
+@pytest.mark.parametrize("shingle_mode,hash_mode", list(GOLDEN_KEYS))
+def test_band_keys_match_golden_checksums(spark, shingle_mode, hash_mode):
+    import hashlib
+
+    from deltalake_spark.operators.dedup import minhash_band_keys
+
+    keys = minhash_band_keys(
+        _docs(spark, GOLDEN_DOCS), **PARAMS,
+        shingle_mode=shingle_mode, hash_mode=hash_mode)
+    assert keys.schema.simpleString() == (
+        "struct<doc_id:bigint,band:int,band_hash:bigint>")
+    rows = sorted((r["doc_id"], r["band"], r["band_hash"])
+                  for r in keys.collect())
+    text = "\n".join(f"{i},{b},{h}" for i, b, h in rows)
+    got = (len(rows), hashlib.sha256(text.encode()).hexdigest())
+    assert got == GOLDEN_KEYS[(shingle_mode, hash_mode)]
+
+
 def test_probe_plan_has_no_index_side_signature_work(spark, corpus):
     from deltalake_spark.operators.dedup import (
         minhash_dedup_incremental,

@@ -109,3 +109,49 @@ def test_partial_failure_replays_to_identical_decisions(spark, setup):
     assert got[11]["is_new"] is True   # self-keys excluded
     assert got[10]["is_new"] is False and got[10]["match_id"] == 2
     assert got[20]["match_id"] == 11   # cross-batch still works
+
+
+def test_band_keys_derived_once_per_trigger(spark, setup, monkeypatch):
+    """The sink derives a batch's band keys once and hands them to both
+    the probe and the index append, instead of deriving them again
+    from the kept docs."""
+    import deltalake_spark.operators.dedup as dedup
+
+    calls = {"keys": 0, "probe": 0}
+    keys_fn = dedup.minhash_band_keys
+    probe_fn = dedup.minhash_dedup_incremental
+
+    def counting_keys(*a, **kw):
+        calls["keys"] += 1
+        return keys_fn(*a, **kw)
+
+    def counting_probe(*a, **kw):
+        calls["probe"] += 1
+        return probe_fn(*a, **kw)
+
+    monkeypatch.setattr(dedup, "minhash_band_keys", counting_keys)
+    monkeypatch.setattr(dedup, "minhash_dedup_incremental", counting_probe)
+    got = _run(spark, setup)
+    assert calls["probe"] == 2                 # one probe per trigger
+    assert calls["keys"] == calls["probe"]
+    assert got[20]["match_id"] == 11           # cross-batch still works
+
+
+def test_sink_pins_last_one_trigger(spark, setup):
+    """Each trigger pins the batch's band keys and its decisions; both
+    are released when the trigger ends, so a three-trigger run leaves
+    the session's persistent-RDD count where it found it."""
+    from deltalake_spark.session import cached_rdd_count, release_caches
+    from deltalake_spark.streaming.sink import minhash_stream_dedup_sink
+    from deltalake_spark.streaming.windowed import read_parquet_stream
+
+    idx, dec, _, _ = setup
+    d = _stage(spark, [[(30 + 10 * b, _text(300 + b)),
+                        (31 + 10 * b, _text(b))] for b in range(3)])
+    release_caches(spark)  # clean slate regardless of suite order
+    before = cached_rdd_count(spark)
+    stream = read_parquet_stream(spark, d, max_files_per_trigger=1)
+    minhash_stream_dedup_sink(stream, idx, dec, app_id="t-stream-pins",
+                              **KW)
+    assert dec.to_df().count() == 6            # three triggers ran
+    assert cached_rdd_count(spark) == before

@@ -25,14 +25,19 @@ GATES = sys.argv[1:] or [
 ]
 
 
-def main() -> None:
+def main() -> int:
+    qs = entry_mod.queries()
+    bad = [name for name in GATES if name not in qs]
+    if bad:
+        print(f"heap_ab: unknown gate(s): {', '.join(bad)}\n"
+              f"valid gates: {' '.join(sorted(qs))}", file=sys.stderr)
+        return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("heap-ab")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).collect()
     mem = spark.conf.get("spark.driver.memory")
-    qs = entry_mod.queries()
     out = {}
     for name in GATES:
         fn = qs[name]
@@ -48,7 +53,8 @@ def main() -> None:
                      "warm": samples[1:], "rows": n}
         print(f"# {mem} {name}: {out[name]}", file=sys.stderr)
     print(json.dumps({"mem": mem, "gates": out}))
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -23,19 +23,47 @@ from xml.etree import ElementTree
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+# pytest options whose value is the NEXT argument when written apart
+# ("-p no:cacheprovider", "-k expr"); that value is not a test target
+_VALUE_FLAGS = frozenset({
+    "-k", "-m", "-p", "-c", "-o", "-W", "-r", "--config-file",
+    "--override-ini", "--pythonwarnings", "--deselect", "--ignore",
+    "--ignore-glob", "--rootdir", "--confcutdir", "--basetemp",
+    "--maxfail", "--durations", "--tb", "--junitxml", "--log-level",
+    "--log-file",
+})
+
+
+def has_target(args: list[str]) -> bool:
+    """True when ``args`` name a test path or node id. Flags and the
+    values of value-taking flags are not targets."""
+    skip = False
+    for a in args:
+        if skip:
+            skip = False
+        elif a.startswith("-"):
+            skip = a in _VALUE_FLAGS
+        else:
+            return True
+    return False
+
+
+def pytest_args(extra: list[str], junit: str) -> list[str]:
+    """pytest's argv: positional targets in ``extra`` REPLACE the
+    default ``tests/`` target; bare flags (-k, -x, ...) compose with
+    it."""
+    target = [] if has_target(extra) else ["tests/"]
+    return [*target, "-q", f"--junitxml={junit}", *extra]
+
+
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "SUITE.json"
     extra = sys.argv[2:]
     junit = os.path.join(HERE, ".suite_junit.xml")
     started = datetime.now(timezone.utc).isoformat(timespec="seconds")
     t0 = time.time()
-    # extra positional args (paths/node-ids) REPLACE the default
-    # tests/ target; bare flags (-k, -x, ...) compose with it
-    has_target = any(not a.startswith("-") for a in extra)
-    target = [] if has_target else ["tests/"]
     proc = subprocess.run(
-        [sys.executable, "-m", "pytest", *target, "-q",
-         f"--junitxml={junit}", *extra],
+        [sys.executable, "-m", "pytest", *pytest_args(extra, junit)],
         cwd=HERE,
     )
     duration = round(time.time() - t0, 1)
