@@ -29,6 +29,7 @@ from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 if TYPE_CHECKING:
     from deltalake_spark.delta.table import DeltaTable
@@ -40,11 +41,25 @@ def _cdc_dir(table: "DeltaTable") -> str:
     return os.path.join(table.path, "_change_data")
 
 
-def write_cdc_file(table: "DeltaTable", df: DataFrame, version: int) -> None:
+def cdc_schema(table: "DeltaTable") -> StructType:
+    """Schema of the change feed: the table's columns, then
+    ``_change_type``, ``_commit_version`` and ``_commit_timestamp``."""
+    return table.schema() \
+        .add("_change_type", "string") \
+        .add("_commit_version", "long") \
+        .add("_commit_timestamp", "timestamp")
+
+
+def write_cdc_file(
+    table: "DeltaTable", df: DataFrame, version: int,
+    configuration: "dict[str, str] | None" = None,
+) -> None:
     """Persist CDC records for one commit. ``df`` must carry data columns
     + ``_change_type``; version/timestamp columns are stamped here.
-    Format follows ``delta.cdc.writeFormat`` (parquet | json)."""
-    fmt = table.configuration.get("delta.cdc.writeFormat", "parquet")
+    Format follows ``delta.cdc.writeFormat`` (parquet | json) in
+    ``configuration`` (default: the table's latest)."""
+    conf = table.configuration if configuration is None else configuration
+    fmt = conf.get("delta.cdc.writeFormat", "parquet")
     if fmt not in ("parquet", "json"):
         raise ValueError(f"unsupported delta.cdc.writeFormat {fmt!r}")
     out_dir = _cdc_dir(table)
@@ -100,7 +115,9 @@ def read_changes(
     ending_version: int | None = None,
 ) -> DataFrame:
     """Changes for commit versions in [start, end], inclusive (reference
-    readByVersion, src/cdc/index.ts:1244-1254,1403-1421)."""
+    readByVersion, src/cdc/index.ts:1244-1254,1403-1421). Files are read
+    with the known feed schema (:func:`cdc_schema`): inference would start
+    a Spark job on every poll, and would read JSON timestamps as strings."""
     from deltalake_spark.delta import log as dlog
 
     dlog.require_table(table.path)
@@ -108,32 +125,21 @@ def read_changes(
     files = [
         p for v, p in _cdc_files(table) if starting_version <= v <= end
     ]
+    schema = cdc_schema(table)
     if not files:
-        # empty frame with the CDC meta columns appended to the schema
-        schema = table.schema()
-        schema = schema.add("_change_type", "string") \
-            .add("_commit_version", "long") \
-            .add("_commit_timestamp", "timestamp")
         return table.spark.createDataFrame([], schema)
     pq_files = [f for f in files if f.endswith(".parquet")]
     js_files = [f for f in files if f.endswith(".json")]
     parts = []
     if pq_files:
-        parts.append(table.spark.read.parquet(*pq_files))
+        parts.append(table.spark.read.schema(schema).parquet(*pq_files))
     if js_files:
-        # JSON CDC (own json writeFormat or foreign writers): coerce to
-        # the parquet-side schema when present, else the table schema +
-        # CDF meta columns (inference would read timestamps as strings)
-        ref = parts[0].schema if parts else (
-            table.schema().add("_change_type", "string")
-            .add("_commit_version", "long")
-            .add("_commit_timestamp", "timestamp")
-        )
+        # JSON CDC (own json writeFormat or foreign writers).
         # NB: json() takes schema as 2nd positional — pass paths as a list
-        parts.append(table.spark.read.schema(ref).json(js_files))
+        parts.append(table.spark.read.schema(schema).json(js_files))
     out = parts[0]
     for p in parts[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
+        out = out.unionByName(p)
     return out
 
 
@@ -165,12 +171,8 @@ def subscribe_stream(
     the consumer offset store (reference OffsetStorage,
     src/cdc/index.ts:502-596).
     """
-    schema = table.schema() \
-        .add("_change_type", "string") \
-        .add("_commit_version", "long") \
-        .add("_commit_timestamp", "timestamp")
     stream = (
-        table.spark.readStream.schema(schema)
+        table.spark.readStream.schema(cdc_schema(table))
         .parquet(os.path.join(_cdc_dir(table), ""))
     )
     writer = (

@@ -19,7 +19,6 @@ metadata-scale even for 100 TB tables (file *entries*, not data).
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -73,9 +72,6 @@ class Snapshot:
     @property
     def configuration(self) -> dict[str, str]:
         return (self.metadata or {}).get("configuration", {})
-
-    def file_paths(self, table_path: str) -> list[str]:
-        return [os.path.join(table_path, f["path"]) for f in self.files]
 
 
 def _apply_actions(state: dict[str, Any], actions: list[dict[str, Any]]) -> None:

@@ -56,6 +56,13 @@ def _to_condition(cond: Any) -> Column:
     raise TypeError(f"Unsupported condition type: {type(cond)}")
 
 
+def _schema_of(snap: "dsnap.Snapshot | None") -> StructType:
+    """Logical schema recorded in ``snap`` (empty when there is none)."""
+    if snap is None or not snap.schema_string:
+        return StructType([])
+    return StructType.fromJson(json.loads(snap.schema_string))
+
+
 def _numeric_rank(t: str) -> int | None:
     return {"integer": 0, "long": 1, "float": 2, "double": 3}.get(t)
 
@@ -88,10 +95,7 @@ class DeltaTable:
         return self.snapshot().transactions.get(app_id, -1)
 
     def schema(self, version: int | None = None) -> StructType:
-        snap = self.snapshot(version)
-        if not snap.schema_string:
-            return StructType([])
-        return StructType.fromJson(json.loads(snap.schema_string))
+        return _schema_of(self.snapshot(version))
 
     def history(self) -> list[dict[str, Any]]:
         """Commit history, newest first (reference history():
@@ -612,6 +616,7 @@ class DeltaTable:
         self, df: DataFrame, partition_by: list[str],
         mapping: dict[str, str] | None = None,
         max_records_per_file: int | None = None,
+        snap: "dsnap.Snapshot | None" = None,
     ) -> list[dict[str, Any]]:
         """Write df via a staging dir, move parquet files into the table
         tree with unique names, return add actions with footer stats.
@@ -626,9 +631,11 @@ class DeltaTable:
         CHECK constraints are enforced — one extra aggregation pass over
         the incoming batch, only when constraints exist.
         """
-        # one snapshot load feeds the protocol gate, constraint lookup,
-        # and column mapping — snapshot() replays the log each call
-        snap = self.snapshot() if self.exists() else None
+        # one snapshot (the caller's, else the latest) feeds the protocol
+        # gate, constraint lookup, and column mapping — snapshot()
+        # replays the log each call
+        if snap is None and self.exists():
+            snap = self.snapshot()
         self._assert_writer_protocol(snap)
         self._enforce_constraints(df, snap)
         if mapping is None and snap is not None:
@@ -821,21 +828,15 @@ class DeltaTable:
 
         adds = self._stage_and_move(
             df, partition_cols, mapping=write_mapping,
-            max_records_per_file=max_records_per_file)
+            max_records_per_file=max_records_per_file, snap=prev)
         num_rows = sum(
             json.loads(a["stats"])["numRecords"] for a in adds
         )
 
         removes: list[dict[str, Any]] = []
         if mode == "overwrite" and prev:
-            now = int(time.time() * 1000)
-            removes = [
-                {"remove": {"path": f["path"], "deletionTimestamp": now,
-                            "dataChange": True}}
-                for f in prev.files
-            ]
+            removes = self._removes([f["path"] for f in prev.files])
 
-        version = (prev.version if prev else -1) + 1
         commit_actions = (
             [dlog.commit_info_action(
                 _operation,
@@ -847,17 +848,7 @@ class DeltaTable:
             + [{"add": a} for a in adds]
             + (_extra_actions or [])
         )
-        try:
-            dlog.write_commit(self.path, version, commit_actions)
-        except ConcurrencyError:
-            # roll back the moved data files before re-raising
-            for a in adds:
-                try:
-                    os.remove(os.path.join(self.path, a["path"]))
-                except OSError:
-                    pass
-            raise
-        dsnap.maybe_checkpoint(self.path, version)
+        version = self._commit(prev, commit_actions, adds)
         if _emit_cdc:
             self._maybe_write_cdc_for_write(df, mode, prev, version)
         return version
@@ -900,10 +891,9 @@ class DeltaTable:
     # excluded from vacuum; new DVs are spec .bin files at the table root
     DV_DIR = "_deletion_vectors"
 
-    def dv_enabled(self) -> bool:
-        return self.configuration.get(
-            "delta.enableDeletionVectors", ""
-        ).lower() == "true"
+    def dv_enabled(self, snap: "dsnap.Snapshot | None" = None) -> bool:
+        conf = snap.configuration if snap is not None else self.configuration
+        return conf.get("delta.enableDeletionVectors", "").lower() == "true"
 
     def enable_deletion_vectors(self) -> int:
         return self.update_metadata({"delta.enableDeletionVectors": "true"})
@@ -1037,8 +1027,7 @@ class DeltaTable:
         pcols = list(snap.partition_columns)
         if not pcols or not adds:
             return df
-        schema = StructType.fromJson(json.loads(snap.schema_string)) \
-            if snap.schema_string else StructType([])
+        schema = _schema_of(snap)
         mapping = self._column_mapping(snap)
         rows = [
             (self._abs_file_key(f["path"]),
@@ -1068,10 +1057,8 @@ class DeltaTable:
         partition values attached from the log — the _metadata struct
         stops resolving after any join, so everything derived from it
         must be columnar before ``_with_partition_values``."""
-        phys = self._physical_schema(
-            StructType.fromJson(json.loads(snap.schema_string))
-            if snap.schema_string else StructType([]),
-            self._column_mapping(snap))
+        phys = self._physical_schema(_schema_of(snap),
+                                     self._column_mapping(snap))
         reader = self.spark.read.schema(phys)
         raw = (
             reader.parquet(
@@ -1106,18 +1093,21 @@ class DeltaTable:
             "left_anti",
         ).drop("__fp", "__ri")
 
-    def _scan(self, snap: "dsnap.Snapshot",
-              adds: list[dict[str, Any]]) -> DataFrame:
-        schema = StructType.fromJson(json.loads(snap.schema_string)) \
-            if snap.schema_string else StructType([])
-        mapping = self._column_mapping(snap)
-        paths = [os.path.join(self.path, f["path"]) for f in adds]
-        if not paths:
+    def _scan(self, snap: "dsnap.Snapshot", adds: list[dict[str, Any]],
+              with_file: bool = False) -> DataFrame:
+        """Logical rows of ``adds`` as of ``snap``, deletion vectors
+        applied. ``with_file`` keeps the ``__file`` column (the raw
+        _metadata URI), taken before the DV anti-join — Spark rejects
+        input_file_name() once the plan has two sources."""
+        schema = _schema_of(snap)
+        if not adds:
             return self.spark.createDataFrame([], schema)
+        mapping = self._column_mapping(snap)
         phys = self._physical_schema(schema, mapping)
         df = self._apply_dv(self._keyed_scan(snap, adds), snap)
+        extra = ["__file"] if with_file else []
         return self._to_logical(
-            df.select(*[f.name for f in phys.fields]), mapping
+            df.select(*[f.name for f in phys.fields], *extra), mapping
         )
 
     def to_df(self, version: int | None = None) -> DataFrame:
@@ -1141,18 +1131,8 @@ class DeltaTable:
         Catalyst still does row-group skipping inside surviving files).
         ``last_query_skipped_files`` mirrors the reference's counter
         (table.ts:1613-1617)."""
-        from deltalake_spark.delta.pruning import prune_files
-
         snap = self.snapshot(version)
-        kept, skipped = prune_files(
-            snap.files, filter if isinstance(filter, Mapping) else None,
-            list(snap.partition_columns),
-            # stats are keyed by PHYSICAL parquet names; predicates arrive
-            # with logical names (partition columns can't be renamed, so
-            # they are unaffected)
-            column_mapping=self._column_mapping(snap),
-        )
-        self.last_query_skipped_files = skipped
+        kept, self.last_query_skipped_files = self._prune(snap, filter)
         df = self._scan(snap, kept)
         if filter:
             df = df.filter(translate_filter(filter))
@@ -1195,43 +1175,78 @@ class DeltaTable:
             return p
         return rel.replace(os.sep, "/")
 
-    def _to_df_with_file(self) -> DataFrame:
-        """Current snapshot scan with a ``__file`` column. The file path
-        comes from _metadata attached before any DV anti-join — Spark
-        rejects input_file_name() once the plan has two sources."""
-        snap = self.snapshot()
-        mapping = self._column_mapping(snap)
-        phys = self._physical_schema(self.schema(), mapping)
-        raw = self._keyed_scan(snap, snap.files)
-        return self._to_logical(
-            self._apply_dv(raw, snap)
-            .select(*[f.name for f in phys.fields], "__file"),
-            mapping,
+    def _prune(
+        self, snap: "dsnap.Snapshot", filter: Any,
+    ) -> tuple[list[dict[str, Any]], int]:
+        """(files of ``snap`` that ``filter`` can match, number skipped).
+        A Mongo filter doc prunes by partition values and min/max stats,
+        and only files that provably cannot match drop out; a SQL string
+        or Column keeps every file."""
+        from deltalake_spark.delta.pruning import prune_files
+
+        return prune_files(
+            snap.files, filter if isinstance(filter, Mapping) else None,
+            list(snap.partition_columns),
+            # stats are keyed by PHYSICAL parquet names; predicates arrive
+            # with logical names (partition columns can't be renamed, so
+            # they are unaffected)
+            column_mapping=self._column_mapping(snap),
         )
 
-    def _affected_files(self, cond: Column) -> tuple[list[str], int]:
-        """(relative paths of files containing matches, matched row count)
-        — one aggregate job, no data rewrite yet."""
-        df = self._to_df_with_file()
+    def _affected_files(
+        self, snap: "dsnap.Snapshot", files: list[dict[str, Any]],
+        cond: Column,
+    ) -> tuple[list[str], int]:
+        """(log paths of the ``files`` holding rows that match ``cond``,
+        matched row count) — one aggregate job, no data rewrite yet."""
+        if not files:
+            return [], 0
         rows = (
-            df.filter(cond)
+            self._scan(snap, files, with_file=True)
+            .filter(cond)
             .groupBy("__file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        files = [self._rel_path(r["__file"]) for r in rows]
-        return files, sum(r["n"] for r in rows)
+        return ([self._rel_path(r["__file"]) for r in rows],
+                sum(r["n"] for r in rows))
 
-    def _read_files(self, rel_paths: list[str]) -> DataFrame:
-        snap = self.snapshot()
-        schema = self.schema()
-        mapping = self._column_mapping(snap)
-        phys = self._physical_schema(schema, mapping)
-        subset = [f for f in snap.files if f["path"] in set(rel_paths)]
-        df = self._apply_dv(self._keyed_scan(snap, subset), snap)
-        return self._to_logical(
-            df.select(*[f.name for f in phys.fields]), mapping
-        )
+    def _read_files(self, rel_paths: list[str],
+                    snap: "dsnap.Snapshot | None" = None) -> DataFrame:
+        """Logical rows of the files ``rel_paths`` names in ``snap``
+        (default: the latest snapshot), deletion vectors applied."""
+        if snap is None:
+            snap = self.snapshot()
+        wanted = set(rel_paths)
+        return self._scan(snap, [f for f in snap.files if f["path"] in wanted])
+
+    def _commit(
+        self, snap: "dsnap.Snapshot | None", actions: list[dict[str, Any]],
+        adds: list[dict[str, Any]] | None = None,
+    ) -> int:
+        """Commit ``actions`` as the version after ``snap``, the snapshot
+        the operation read, and return that version. A commit that landed
+        in between raises ConcurrencyError instead of being silently
+        written over; the data files this operation moved into the table
+        (``adds``) are removed again before it propagates."""
+        version = (snap.version if snap is not None else -1) + 1
+        try:
+            dlog.write_commit(self.path, version, actions)
+        except ConcurrencyError:
+            for a in adds or []:
+                try:
+                    os.remove(os.path.join(self.path, a["path"]))
+                except OSError:
+                    pass
+            raise
+        dsnap.maybe_checkpoint(self.path, version)
+        return version
+
+    @staticmethod
+    def _removes(paths: list[str]) -> list[dict[str, Any]]:
+        now = int(time.time() * 1000)
+        return [{"remove": {"path": p, "deletionTimestamp": now,
+                            "dataChange": True}} for p in paths]
 
     def _rewrite_commit(
         self,
@@ -1239,44 +1254,41 @@ class DeltaTable:
         remove_paths: list[str],
         new_df: DataFrame | None,
         extra_actions: list[dict[str, Any]] | None = None,
+        *,
+        snap: "dsnap.Snapshot | None" = None,
         **metrics: Any,
     ) -> int:
         """Copy-on-write commit: rewrite ``remove_paths`` as ``new_df``
-        (reference delete/update file rewrite, src/delta/table.ts:2214-2414)."""
-        snap = self.snapshot()
+        (reference delete/update file rewrite, src/delta/table.ts:2214-2414),
+        against ``snap`` when the caller read one (default: the latest)."""
+        if snap is None:
+            snap = self.snapshot()
         adds = (
-            self._stage_and_move(new_df, list(snap.partition_columns))
+            self._stage_and_move(new_df, list(snap.partition_columns),
+                                 snap=snap)
             if new_df is not None else []
         )
-        now = int(time.time() * 1000)
-        removes = [
-            {"remove": {"path": p, "deletionTimestamp": now,
-                        "dataChange": True}}
-            for p in remove_paths
-        ]
-        version = snap.version + 1
-        dlog.write_commit(self.path, version, (
+        return self._commit(snap, (
             [dlog.commit_info_action(operation, {}, **metrics)]
-            + removes
+            + self._removes(remove_paths)
             + [{"add": a} for a in adds]
             + (extra_actions or [])
-        ))
-        dsnap.maybe_checkpoint(self.path, version)
-        return version
+        ), adds)
 
     def _dv_soft_delete_actions(
-        self, cond: Column, no_match_msg: str,
-    ) -> tuple[list[dict[str, Any]], int, DataFrame, "dsnap.Snapshot"]:
+        self, snap: "dsnap.Snapshot", files: list[dict[str, Any]],
+        cond: Column, no_match_msg: str,
+    ) -> tuple[list[dict[str, Any]], int, DataFrame]:
         """Build the remove+add actions (with deletionVector descriptors)
-        for a soft delete of rows matching ``cond`` — WITHOUT committing.
-        Callers compose them into a single atomic commit: plain delete,
-        or delete+append for the DV update path (readers must never see
-        the intermediate rows-missing state). Returns
-        (actions, n_matched, matched logical rows, snapshot)."""
-        snap = self.snapshot()
-        schema = self.schema()
+        for a soft delete of the rows of ``files`` matching ``cond`` —
+        WITHOUT committing. Callers compose them into a single atomic
+        commit: plain delete, or delete+append for the DV update path
+        (readers must never see the intermediate rows-missing state).
+        Returns (actions, n_matched, matched logical rows)."""
+        if not files:
+            raise NoMatchError(no_match_msg)
         mapping = self._column_mapping(snap)
-        keyed = self._keyed_scan(snap, snap.files)
+        keyed = self._keyed_scan(snap, files)
         old_dv = self._dv_df(snap)
         live = keyed
         if old_dv is not None:
@@ -1364,58 +1376,55 @@ class DeltaTable:
                 new_add["deletionVector"] = descriptors[f["path"]]
                 new_add["dataChange"] = False
                 actions.append({"add": new_add})
-        return actions, n_matched, matched, snap
+        return actions, n_matched, matched.select(*_schema_of(snap).names)
 
-    def _delete_with_dv(self, cond: Column,
-                        _emit_cdc: bool = True) -> dict[str, Any]:
+    def _delete_with_dv(self, snap: "dsnap.Snapshot",
+                        files: list[dict[str, Any]],
+                        cond: Column) -> dict[str, Any]:
         """Soft delete: record (file, row_index) pairs in a deletion-
         vector sidecar instead of rewriting data files. The whole DV set
         is rewritten each delete (it is metadata-scale); affected files
         get remove+add with a deletionVector descriptor — zero data I/O.
         """
-        dv_actions, n_matched, matched, snap = self._dv_soft_delete_actions(
-            cond, "delete matched no rows")
-        cdc_df = None
-        if _emit_cdc and self.cdc_enabled():
-            cdc_df = matched.drop("__fp", "__ri").withColumn(
-                "_change_type", F.lit("delete")
-            )
-        actions = [dlog.commit_info_action(
+        dv_actions, n_matched, matched = self._dv_soft_delete_actions(
+            snap, files, cond, "delete matched no rows")
+        version = self._commit(snap, [dlog.commit_info_action(
             "DELETE", {"mode": "deletion-vectors"},
             numDeletedRows=n_matched,
-        )] + dv_actions
-        version = snap.version + 1
-        dlog.write_commit(self.path, version, actions)
-        dsnap.maybe_checkpoint(self.path, version)
-        if cdc_df is not None:
-            self._write_cdc(cdc_df, version)
+        )] + dv_actions)
+        if self.cdc_enabled(snap):
+            self._write_cdc(
+                matched.withColumn("_change_type", F.lit("delete")),
+                version, snap)
         return {"version": version, "numDeletedRows": n_matched}
 
     def delete(self, filter: Any = None) -> dict[str, Any]:
         """Delete matching rows; errors when nothing matches (reference
         semantics, src/delta/table.ts:2214-2297). With
         ``delta.enableDeletionVectors=true`` the delete is a soft DV
-        write (no data-file rewrite); otherwise copy-on-write."""
-        self._assert_writer_protocol()
+        write (no data-file rewrite); otherwise copy-on-write. A Mongo
+        filter doc prunes files by stats first (as :meth:`query` does),
+        so files that provably hold no match are never scanned. One
+        snapshot is read and committed against."""
+        snap = self.snapshot()
+        self._assert_writer_protocol(snap)
         cond = _to_condition(filter)
-        if self.dv_enabled():
-            return self._delete_with_dv(cond)
-        files, n_matched = self._affected_files(cond)
-        if not files:
+        files, _ = self._prune(snap, filter)
+        if self.dv_enabled(snap):
+            return self._delete_with_dv(snap, files, cond)
+        paths, n_matched = self._affected_files(snap, files, cond)
+        if not paths:
             raise NoMatchError("delete matched no rows")
-        affected = self._read_files(files)
-        keep = affected.filter(~F.coalesce(cond, F.lit(False)))
-        cdc_df = None
-        if self.cdc_enabled():
-            cdc_df = affected.filter(cond).withColumn(
-                "_change_type", F.lit("delete")
-            )
+        affected = self._read_files(paths, snap)
         version = self._rewrite_commit(
-            "DELETE", files, keep,
-            numDeletedRows=n_matched, numRemovedFiles=len(files),
+            "DELETE", paths, affected.filter(~F.coalesce(cond, F.lit(False))),
+            snap=snap, numDeletedRows=n_matched, numRemovedFiles=len(paths),
         )
-        if cdc_df is not None:
-            self._write_cdc(cdc_df, version)
+        if self.cdc_enabled(snap):
+            self._write_cdc(
+                affected.filter(cond).withColumn("_change_type",
+                                                 F.lit("delete")),
+                version, snap)
         return {"version": version, "numDeletedRows": n_matched}
 
     @staticmethod
@@ -1428,99 +1437,85 @@ class DeltaTable:
             return F.col(v[1:])
         return F.lit(v)
 
-    def _update_with_dv(self, cond: Column,
-                        updates: Mapping[str, Any]) -> dict[str, Any]:
+    def _assignments(self, snap: "dsnap.Snapshot",
+                     updates: Mapping[str, Any]) -> dict[str, Column]:
+        """UPDATE's ``updates`` as {column: new value, cast to the
+        column's type}. Applied with one ``withColumns``, so every value
+        is computed from the row as it was (SQL ``SET`` semantics), not
+        from the assignments before it."""
+        schema = _schema_of(snap)
+        out = {}
+        for name, v in updates.items():
+            if name not in schema.names:
+                raise ValueError(
+                    f"update target column {name!r} not in table")
+            out[name] = self._update_val(v).cast(schema[name].dataType)
+        return out
+
+    @staticmethod
+    def _update_images(matched: DataFrame,
+                       assigned: Mapping[str, Column]) -> DataFrame:
+        """Change-feed records of an UPDATE: each matched row as its
+        preimage, and with the assignments applied as its postimage —
+        never a re-filter of the rewritten rows: when the predicate tests
+        an updated column, the new value no longer matches and the
+        postimage would silently vanish from the feed."""
+        pre = matched.withColumn("_change_type", F.lit("update_preimage"))
+        post = matched.withColumns(dict(assigned)).withColumn(
+            "_change_type", F.lit("update_postimage"))
+        return pre.unionByName(post)
+
+    def _update_with_dv(self, snap: "dsnap.Snapshot",
+                        files: list[dict[str, Any]], cond: Column,
+                        assigned: Mapping[str, Column]) -> dict[str, Any]:
         """DV-style update: soft-delete the matched row versions (zero
         data rewrite) and append the updated rows — in ONE commit, the
         delete+insert decomposition Delta uses for DV updates. A single
         commit means concurrent readers never observe the intermediate
         rows-missing state and a crash between the two halves cannot
         lose the updated rows."""
-        schema = self.schema()
-        matched = self.to_df().filter(F.coalesce(cond, F.lit(False)))
-        new_rows = matched
-        for name, v in updates.items():
-            if name not in new_rows.columns:
-                raise ValueError(
-                    f"update target column {name!r} not in table")
-            target_type = schema[name].dataType
-            new_rows = new_rows.withColumn(
-                name, self._update_val(v).cast(target_type))
-        cdc_pre = cdc_post = None
-        if self.cdc_enabled():
-            cdc_pre = matched.withColumn(
-                "_change_type", F.lit("update_preimage"))
-            cdc_post = new_rows.withColumn(
-                "_change_type", F.lit("update_postimage"))
-        dv_actions, n, _m, snap = self._dv_soft_delete_actions(
-            cond, "update matched no rows")
-        adds = self._stage_and_move(new_rows, list(snap.partition_columns))
-        actions = [dlog.commit_info_action(
+        dv_actions, n, matched = self._dv_soft_delete_actions(
+            snap, files, cond, "update matched no rows")
+        adds = self._stage_and_move(matched.withColumns(dict(assigned)),
+                                    list(snap.partition_columns), snap=snap)
+        version = self._commit(snap, [dlog.commit_info_action(
             "UPDATE", {"mode": "deletion-vectors"}, numUpdatedRows=n,
-        )] + dv_actions + [{"add": a} for a in adds]
-        version = snap.version + 1
-        dlog.write_commit(self.path, version, actions)
-        dsnap.maybe_checkpoint(self.path, version)
-        if cdc_pre is not None:
-            self._write_cdc(cdc_pre.unionByName(cdc_post), version)
+        )] + dv_actions + [{"add": a} for a in adds], adds)
+        if self.cdc_enabled(snap):
+            self._write_cdc(self._update_images(matched, assigned),
+                            version, snap)
         return {"version": version, "numUpdatedRows": n}
 
     def update(self, filter: Any, updates: Mapping[str, Any]) -> dict[str, Any]:
         """Update matching rows with {col: literal | Column | SQL-string}
         (reference update(), src/delta/table.ts:2321-2414: merged
         {...row, ...updates}). With deletion vectors enabled the update
-        is soft-delete + append instead of a file rewrite."""
+        is soft-delete + append instead of a file rewrite. A Mongo filter
+        doc prunes files by stats first, and one snapshot is read and
+        committed against, as in :meth:`delete`."""
+        snap = self.snapshot()
         cond = _to_condition(filter)
-        if self.dv_enabled():
-            return self._update_with_dv(cond, updates)
-        files, n_matched = self._affected_files(cond)
-        if not files:
+        assigned = self._assignments(snap, updates)
+        files, _ = self._prune(snap, filter)
+        if self.dv_enabled(snap):
+            return self._update_with_dv(snap, files, cond, assigned)
+        paths, n_matched = self._affected_files(snap, files, cond)
+        if not paths:
             raise NoMatchError("update matched no rows")
-        affected = self._read_files(files)
-
-        def _val(v: Any) -> Column:
-            if isinstance(v, Column):
-                return v
-            if isinstance(v, str) and not v.startswith("$"):
-                return F.expr(v)
-            if isinstance(v, str):
-                return F.col(v[1:])
-            return F.lit(v)
-
+        affected = self._read_files(paths, snap)
         matched_cond = F.coalesce(cond, F.lit(False))
-        new_df = affected
-        for name, v in updates.items():
-            if name not in affected.columns:
-                raise ValueError(f"update target column {name!r} not in table")
-            target_type = affected.schema[name].dataType
-            new_df = new_df.withColumn(
-                name,
-                F.when(matched_cond, _val(v).cast(target_type))
-                .otherwise(F.col(name)),
-            )
-        cdc_pre = cdc_post = None
-        if self.cdc_enabled():
-            matched_rows = affected.filter(matched_cond)
-            cdc_pre = matched_rows.withColumn(
-                "_change_type", F.lit("update_preimage")
-            )
-            # postimage = matched rows WITH assignments applied — never
-            # re-filter new_df: when the predicate tests a column being
-            # updated, the mutated value no longer matches and the
-            # postimage would silently vanish from the feed
-            cdc_post = matched_rows
-            for name, v in updates.items():
-                cdc_post = cdc_post.withColumn(
-                    name, _val(v).cast(affected.schema[name].dataType))
-            cdc_post = cdc_post.withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
+        new_df = affected.withColumns({
+            name: F.when(matched_cond, val).otherwise(F.col(name))
+            for name, val in assigned.items()
+        })
         version = self._rewrite_commit(
-            "UPDATE", files, new_df,
-            numUpdatedRows=n_matched, numRemovedFiles=len(files),
+            "UPDATE", paths, new_df,
+            snap=snap, numUpdatedRows=n_matched, numRemovedFiles=len(paths),
         )
-        if cdc_pre is not None:
-            self._write_cdc(cdc_pre.unionByName(cdc_post), version)
+        if self.cdc_enabled(snap):
+            self._write_cdc(
+                self._update_images(affected.filter(matched_cond), assigned),
+                version, snap)
         return {"version": version, "numUpdatedRows": n_matched}
 
     def merge(
@@ -1540,179 +1535,185 @@ class DeltaTable:
         nested loop over rows; here a join on ``condition`` using aliases
         ``t`` (target) and ``s`` (source). ``when_matched_update`` is a
         {target_col: SQL-expr} mapping or "*" (take source columns by
-        name). Spark broadcasts a small source automatically.
+        name). ``when_not_matched_insert`` is True (source columns by
+        name) or a {target_col: SQL-expr over the source} mapping.
 
         ``when_matched_condition`` (SQL over ``t``/``s`` aliases or a
         Column) further gates the matched clause, Delta-style
         ``whenMatchedUpdate(condition=...)``: matched rows failing it are
         left untouched (and excluded from counts and CDC).
+
+        Three Spark actions against one snapshot: a probe
+        (``source ⟕ target`` grouped by file: touched files, matched
+        pairs and unmatched source rows in one collect), one data write
+        and one change-feed write. Both writes come from one full outer
+        join of the touched files with the source: a source row with no
+        match in the touched files has no match anywhere, so it is an
+        insert (Delta's own MERGE plan). A ``when_matched_condition``
+        adds one count.
         """
         cond = (
             F.expr(condition) if isinstance(condition, str) else condition
         )
-        schema = self.schema()
-        tcols = [f.name for f in schema.fields]
+        snap = self.snapshot()
+        schema = _schema_of(snap)
+        fields = schema.fields
+        tcols = schema.names
 
-        if not self.exists() or not self.snapshot().files:
-            n_ins = 0
-            if when_not_matched_insert:
-                aligned = source.select(*[
-                    F.col(c).cast(
-                        next(f.dataType for f in schema.fields if f.name == c)
-                    )
-                    if c in source.columns else F.lit(None).alias(c)
-                    for c in tcols
-                ]) if tcols else source
-                n_ins = aligned.count()
-                version = self.write(aligned, _operation="MERGE")
-                return {"version": version, "numInserted": n_ins,
+        if not snap.files:
+            if not when_not_matched_insert:
+                return {"version": snap.version, "numInserted": 0,
                         "numUpdated": 0, "numDeleted": 0}
-            return {"version": self.version(), "numInserted": 0,
+            aligned = source.alias("s").select(*[
+                v.alias(f.name) for v, f in zip(self._insert_values(
+                    source, schema, when_not_matched_insert), fields)
+            ]) if tcols else source
+            n_ins = aligned.count()
+            version = self.write(aligned, _operation="MERGE")
+            return {"version": version, "numInserted": n_ins,
                     "numUpdated": 0, "numDeleted": 0}
 
-        tgt_files = self._to_df_with_file()
-        src = source.alias("s").withColumn("__s_exists", F.lit(True))
-
-        matched = tgt_files.alias("t").join(src, cond, "inner")
-        file_rows = (
-            matched.groupBy("__file").agg(F.count(F.lit(1)).alias("n")).collect()
+        insert = bool(when_not_matched_insert)
+        probe = (
+            source.alias("s")
+            .join(self._scan(snap, snap.files, with_file=True).alias("t"),
+                  cond, "left_outer" if insert else "inner")
+            .groupBy("__file")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-        files = [self._rel_path(r["__file"]) for r in file_rows]
+        files = [self._rel_path(r["__file"]) for r in probe
+                 if r["__file"] is not None]
+        n_pairs = sum(r["n"] for r in probe if r["__file"] is not None)
+        n_ins = sum(r["n"] for r in probe if r["__file"] is None)
 
-        # rows that did not match any target row → inserts
-        inserts = None
-        n_ins = 0
-        if when_not_matched_insert:
-            unmatched = source.alias("s").join(
-                self.to_df().alias("t"), cond, "left_anti"
-            )
-            if isinstance(when_not_matched_insert, Mapping):
-                ins_cols = [
-                    F.expr(str(expr)).alias(c)
-                    for c, expr in when_not_matched_insert.items()
-                ]
-                inserts = unmatched.select(*ins_cols)
-            else:
-                inserts = unmatched.select(*[
-                    F.col(c) if c in source.columns
-                    else F.lit(None).alias(c)
-                    for c in tcols
-                ])
-            inserts = inserts.select(*[
-                F.col(f.name).cast(f.dataType) for f in schema.fields
-            ])
-            n_ins = inserts.count()
+        # insert values are computed on the source side, before any join,
+        # so SQL in an insert mapping resolves against the source alone
+        src = source.alias("s").withColumn("__s_exists", F.lit(True))
+        ins = [F.col(f"__ins{i}") for i in range(len(fields))]
+        if n_ins:
+            src = src.withColumns({
+                f"__ins{i}": v for i, v in
+                enumerate(self._insert_values(source, schema,
+                                              when_not_matched_insert))
+            })
 
         n_upd = n_del = 0
-        rewritten = None
-        post_image = None
-        if files:
-            affected = self._read_files(files).withColumn(
+        rows = cdc = None
+        if not files:
+            if n_ins:
+                rows = src.select(*[v.alias(f.name)
+                                    for v, f in zip(ins, fields)])
+                cdc = rows.withColumn("_change_type", F.lit("insert"))
+        else:
+            affected = self._read_files(files, snap).withColumn(
                 "__tid", F.monotonically_increasing_id()
             )
-            joined = affected.alias("t").join(src, cond, "left_outer")
+            joined = affected.alias("t").join(
+                src, cond, "full_outer" if n_ins else "left_outer")
+            is_target = F.col("__tid").isNotNull()
             # at most one source row drives each target row (Delta MERGE
             # would error; the reference takes the first match —
-            # cdc/index.ts:1969-1975)
+            # cdc/index.ts:1969-1975); source-only rows all pass
             w = Window.partitionBy("__tid").orderBy(F.lit(1))
-            joined = joined.withColumn("__rn", F.row_number().over(w)).filter(
-                F.col("__rn") == 1
-            )
-            is_matched = F.col("__s_exists").isNotNull()
+            joined = joined.withColumn(
+                "__rn", F.row_number().over(w)
+            ).filter(~is_target | (F.col("__rn") == 1))
+            is_matched = is_target & F.col("__s_exists").isNotNull()
             if when_matched_condition is not None:
                 mc = (F.expr(when_matched_condition)
                       if isinstance(when_matched_condition, str)
                       else when_matched_condition)
                 # null-safe: unmatched rows have null source columns
                 is_matched = F.coalesce(is_matched & mc, F.lit(False))
-                n_matched_rows = joined.filter(is_matched).count()
+                n_matched = joined.filter(is_matched).count()
             else:
-                n_matched_rows = sum(r["n"] for r in file_rows)
+                n_matched = n_pairs
 
-            tcols_expr = [F.col(f"t.{c}").alias(c) for c in tcols]
-            pre_image = joined.filter(is_matched).select(*tcols_expr)
+            before = [F.col(f"t.{c}") for c in tcols]
+            after = before
             if when_matched_delete:
-                rewritten = joined.filter(~is_matched).select(*tcols_expr)
-                n_del = n_matched_rows
+                n_del = n_matched
             elif when_matched_update is not None:
                 if when_matched_update == "*":
                     upd = {c: f"s.{c}" for c in source.columns if c in tcols}
                 else:
                     upd = dict(when_matched_update)
-                cols = []
-                for f in schema.fields:
-                    if f.name in upd:
-                        cols.append(
-                            F.when(is_matched,
-                                   F.expr(str(upd[f.name])).cast(f.dataType))
-                            .otherwise(F.col(f"t.{f.name}"))
-                            .alias(f.name)
-                        )
-                    else:
-                        cols.append(F.col(f"t.{f.name}").alias(f.name))
-                rewritten = joined.select(*cols)
-                post_image = joined.filter(is_matched).select(*cols)
-                n_upd = n_matched_rows
-            else:
-                rewritten = joined.select(*tcols_expr)
+                after = [
+                    F.when(is_matched,
+                           F.expr(str(upd[f.name])).cast(f.dataType))
+                    .otherwise(F.col(f"t.{f.name}"))
+                    if f.name in upd else F.col(f"t.{f.name}")
+                    for f in fields
+                ]
+                n_upd = n_matched
+            out = after if not n_ins else [
+                F.when(is_target, a).otherwise(i)
+                for a, i in zip(after, ins)
+            ]
+            kept = joined.filter(~is_matched) if when_matched_delete \
+                else joined
+            rows = kept.select(*[v.alias(c) for v, c in zip(out, tcols)])
 
-        cdc_parts = []
-        if self.cdc_enabled():
-            if files:
-                pre = pre_image  # first-match + clause-condition applied
-                if when_matched_delete:
-                    cdc_parts.append(
-                        pre.withColumn("_change_type", F.lit("delete"))
-                    )
-                elif when_matched_update is not None:
-                    cdc_parts.append(
-                        pre.withColumn("_change_type",
-                                       F.lit("update_preimage"))
-                    )
-                    cdc_parts.append(
-                        post_image.withColumn("_change_type",
-                                              F.lit("update_postimage"))
-                    )
-            if inserts is not None and n_ins:
-                cdc_parts.append(inserts.withColumn(
-                    "_change_type", F.lit("insert")))
+            # change records in one pass over the join: each row yields
+            # the images its clause produces (none for untouched rows)
+            images = []
+            if when_matched_delete:
+                images.append((is_matched, before, "delete"))
+            elif when_matched_update is not None:
+                images.append((is_matched, before, "update_preimage"))
+                images.append((is_matched, after, "update_postimage"))
+            if n_ins:
+                images.append((~is_target, ins, "insert"))
+            if images:
+                cdc = joined.select(F.explode(F.array(*[
+                    F.when(hit, F.struct(
+                        *[v.alias(c) for v, c in zip(vals, tcols)],
+                        F.lit(change).alias("_change_type")))
+                    for hit, vals, change in images
+                ])).alias("__c")).filter(F.col("__c").isNotNull()) \
+                    .select("__c.*")
 
-        # single commit: removes + rewritten + inserts
-        snap = self.snapshot()
-        adds: list[dict[str, Any]] = []
-        if rewritten is not None:
-            adds += self._stage_and_move(rewritten,
-                                         list(snap.partition_columns))
-        if inserts is not None and n_ins:
-            adds += self._stage_and_move(inserts,
-                                         list(snap.partition_columns))
-        now = int(time.time() * 1000)
-        removes = [
-            {"remove": {"path": p, "deletionTimestamp": now,
-                        "dataChange": True}}
-            for p in files
-        ]
-        version = snap.version + 1
-        dlog.write_commit(self.path, version, (
+        # single commit: removes + rewritten and inserted rows
+        adds = (self._stage_and_move(rows, list(snap.partition_columns),
+                                     snap=snap)
+                if rows is not None else [])
+        version = self._commit(snap, (
             [dlog.commit_info_action(
                 "MERGE", {},
                 numTargetRowsUpdated=n_upd, numTargetRowsDeleted=n_del,
                 numTargetRowsInserted=n_ins,
             )]
-            + removes + [{"add": a} for a in adds]
-        ))
-        dsnap.maybe_checkpoint(self.path, version)
-        for part in cdc_parts:
-            self._write_cdc(part, version)
+            + self._removes(files) + [{"add": a} for a in adds]
+        ), adds)
+        if cdc is not None and self.cdc_enabled(snap):
+            self._write_cdc(cdc, version, snap)
         return {"version": version, "numUpdated": n_upd,
                 "numDeleted": n_del, "numInserted": n_ins}
 
+    @staticmethod
+    def _insert_values(source: DataFrame, schema: StructType,
+                       spec: bool | Mapping[str, Any]) -> list[Column]:
+        """MERGE's insert row, one value per table column in schema
+        order, over the source alone: source columns by name (missing
+        ones null), or a {column: SQL-expr} mapping."""
+        if isinstance(spec, Mapping):
+            missing = [c for c in schema.names if c not in spec]
+            if missing:
+                raise ValueError(
+                    f"when_not_matched_insert has no value for column(s) "
+                    f"{missing}")
+            vals = [F.expr(str(spec[f.name])) for f in schema.fields]
+        else:
+            vals = [F.col(f.name) if f.name in source.columns else F.lit(None)
+                    for f in schema.fields]
+        return [v.cast(f.dataType) for v, f in zip(vals, schema.fields)]
+
     # -- CDC ---------------------------------------------------------------
 
-    def cdc_enabled(self) -> bool:
-        return self.configuration.get(
-            "delta.enableChangeDataFeed", "false"
-        ) == "true"
+    def cdc_enabled(self, snap: "dsnap.Snapshot | None" = None) -> bool:
+        conf = snap.configuration if snap is not None else self.configuration
+        return conf.get("delta.enableChangeDataFeed", "false") == "true"
 
     def enable_cdc(self) -> int:
         """Persist delta.enableChangeDataFeed=true (reference setCDCEnabled,
@@ -1721,15 +1722,15 @@ class DeltaTable:
         return self.update_metadata({"delta.enableChangeDataFeed": "true"},
                                     min_protocol=(1, 4))
 
-    def _change_data_dir(self) -> str:
-        return os.path.join(self.path, "_change_data")
-
-    def _write_cdc(self, df: DataFrame, version: int) -> None:
+    def _write_cdc(self, df: DataFrame, version: int,
+                   snap: "dsnap.Snapshot | None" = None) -> None:
         """Write CDC records for a commit (reference writeCDCFile,
-        src/cdc/index.ts:2319-2359; one path, Parquet only)."""
+        src/cdc/index.ts:2319-2359), in the format ``snap``'s (default:
+        the latest) configuration names."""
         from deltalake_spark.delta.cdc import write_cdc_file
 
-        write_cdc_file(self, df, version)
+        write_cdc_file(self, df, version, configuration=(
+            snap.configuration if snap is not None else None))
 
     def _maybe_write_cdc_for_write(
         self, df: DataFrame, mode: str,

@@ -38,3 +38,27 @@ def tables(spark, sf_dir):
     from deltalake_spark.session import load_tables
 
     return load_tables(spark, sf_dir)
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (``fn()``, number of Spark jobs it started).
+
+    Jobs are tagged with a job group, which is thread-local, so jobs other
+    threads run at the same time are not counted."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -264,3 +264,19 @@ def test_consumer_crash_resume_exactly_once(spark, tmp_path):
     # a third consumer resumes past everything: empty poll
     c3 = CDCConsumer(t, "g", storage=storage)
     assert c3.poll().count() == 0
+
+
+def test_read_changes_after_type_widening(spark, tmp_path):
+    """Change files written before a schema-evolving write keep their old
+    column types; the feed reads every file with the table's current
+    schema instead of one file's footer."""
+    t = DeltaTable(spark, str(tmp_path / "widen"))
+    t.write(spark.createDataFrame([(1, 1)], "id int, v int"))
+    t.enable_cdc()
+    t.write(spark.createDataFrame([(2, 2)], "id int, v int"))
+    t.write(spark.createDataFrame([(3, 3, "x")], "id long, v int, w string"),
+            merge_schema=True)
+    rows = sorted((r["id"], r["w"], r["_commit_version"])
+                  for r in t.read_changes(0).collect())
+    assert rows == [(2, None, 2), (3, "x", 3)]
+    assert dict(t.read_changes(0).dtypes)["id"] == "bigint"

@@ -433,3 +433,44 @@ def test_intermittent_failures_with_retry_converge(spark, tmp_path):
         assert flaky["left"] == 0
     finally:
         set_commit_store(real)
+
+
+@pytest.mark.parametrize("op", ["update", "delete", "merge"])
+def test_dml_commits_against_the_snapshot_it_read(spark, tmp_path,
+                                                  monkeypatch, op):
+    """A commit landing between a DML's file selection and its own commit
+    makes the DML raise ConcurrencyError. It must never commit on top of
+    the newer version a result computed from the older one: that lost
+    the concurrent delete's effect on the count and the update itself."""
+    import os
+
+    t = DeltaTable(spark, str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(i, 0) for i in range(10)],
+                                  "id long, v long"))
+    real = DeltaTable._read_files
+    raced = []
+
+    def racing_read(self, *args, **kwargs):
+        if not raced:
+            raced.append(True)
+            DeltaTable(spark, self.path).delete({"id": {"$lt": 5}})
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DeltaTable, "_read_files", racing_read)
+    run = {
+        "update": lambda: t.update({"id": {"$gte": 0}}, {"v": "v + 1"}),
+        "delete": lambda: t.delete({"id": {"$gte": 8}}),
+        "merge": lambda: t.merge(
+            spark.createDataFrame([(9, 7), (42, 1)], "id long, v long"),
+            "t.id = s.id", when_matched_update="*"),
+    }[op]
+    with pytest.raises(ConcurrencyError):
+        run()
+    assert raced
+    assert t.version() == 1  # the write and the concurrent delete only
+    assert sorted((r.id, r.v) for r in t.to_df().collect()) \
+        == [(i, 0) for i in range(5, 10)]
+    # the losing DML's rewritten files were removed again
+    referenced = {f["path"] for v in (0, 1) for f in t.snapshot(v).files}
+    on_disk = {fn for fn in os.listdir(t.path) if fn.endswith(".parquet")}
+    assert on_disk <= referenced

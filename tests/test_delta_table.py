@@ -150,6 +150,22 @@ def test_update(spark, tmp_table):
     assert got[1] == 110 and got[3] == 130 and got[2] == 20
 
 
+@pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
+def test_update_assignments_read_the_row_before_the_update(
+        spark, tmp_table, dv):
+    """SQL SET semantics: every assignment, and the predicate, see the
+    row as it was — a later assignment never reads an earlier one's
+    result."""
+    tmp_table.write(spark.createDataFrame(
+        [(1, 10, 20), (2, 30, 40)], "id long, a long, b long"))
+    if dv:
+        tmp_table.enable_deletion_vectors()
+    res = tmp_table.update({"a": {"$lt": 20}}, {"a": "a + 100", "b": "a"})
+    assert res["numUpdatedRows"] == 1
+    got = {r.id: (r.a, r.b) for r in tmp_table.to_df().collect()}
+    assert got == {1: (110, 10), 2: (30, 40)}
+
+
 def test_merge_upsert(spark, tmp_table):
     tmp_table.write(users_df(spark, BASE))
     src = users_df(spark, [
@@ -185,6 +201,16 @@ def test_merge_into_empty_table(spark, tmp_table):
     res = tmp_table.merge(src, "t.id = s.id", when_matched_update="*")
     assert res["numInserted"] == 4
     assert tmp_table.to_df().count() == 4
+
+
+def test_merge_insert_mapping_applies_to_empty_table(spark, tmp_table):
+    tmp_table.write(spark.createDataFrame([], "id long, v long"))
+    src = spark.createDataFrame([(1, 2)], "id long, v long")
+    res = tmp_table.merge(src, "t.id = s.id",
+                          when_not_matched_insert={"id": "s.id",
+                                                   "v": "s.v * 10"})
+    assert res["numInserted"] == 1
+    assert [(r.id, r.v) for r in tmp_table.to_df().collect()] == [(1, 20)]
 
 
 def test_concurrency_error(spark, tmp_table):
