@@ -25,7 +25,7 @@ import glob
 import os
 import re
 import uuid
-from typing import TYPE_CHECKING, Any
+from typing import TYPE_CHECKING, Any, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,14 +52,13 @@ def cdc_schema(table: "DeltaTable") -> StructType:
 
 def write_cdc_file(
     table: "DeltaTable", df: DataFrame, version: int,
-    configuration: "dict[str, str] | None" = None,
+    configuration: "Mapping[str, str]",
 ) -> None:
     """Persist CDC records for one commit. ``df`` must carry data columns
     + ``_change_type``; version/timestamp columns are stamped here.
     Format follows ``delta.cdc.writeFormat`` (parquet | json) in
-    ``configuration`` (default: the table's latest)."""
-    conf = table.configuration if configuration is None else configuration
-    fmt = conf.get("delta.cdc.writeFormat", "parquet")
+    ``configuration``, the table's as of the commit's snapshot."""
+    fmt = configuration.get("delta.cdc.writeFormat", "parquet")
     if fmt not in ("parquet", "json"):
         raise ValueError(f"unsupported delta.cdc.writeFormat {fmt!r}")
     out_dir = _cdc_dir(table)

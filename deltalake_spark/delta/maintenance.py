@@ -114,7 +114,7 @@ def compact(
         return metrics
 
     rel_paths = [f["path"] for f in selected]
-    df = table._read_files(rel_paths)
+    df = table._read_files(rel_paths, snap)
     total_bytes = metrics["bytesCompacted"]
     n_out = max(1, total_bytes // target_file_size + (
         1 if total_bytes % target_file_size else 0
@@ -124,7 +124,7 @@ def compact(
         on_progress({"phase": "rewrite", "inputFiles": len(rel_paths),
                      "outputFiles": int(n_out)})
     version = table._rewrite_commit(
-        "OPTIMIZE", rel_paths, df,
+        "OPTIMIZE", rel_paths, df, snap=snap,
         numRemovedFiles=len(rel_paths), numAddedFiles=int(n_out),
     )
     metrics["version"] = version
@@ -149,7 +149,8 @@ def deduplicate(
       (1010-1016).
     - keep='latest': max ``order_by`` per key group (997-1009).
     """
-    df = table.to_df()
+    snap = table.snapshot()
+    df = table._scan(snap, snap.files)
     n_before = df.count()
     if primary_keys is None:
         result = df.dropDuplicates()
@@ -171,9 +172,8 @@ def deduplicate(
             .drop("__rn")
         )
     n_after = result.count()
-    snap = table.snapshot()
     version = table._rewrite_commit(
-        "DEDUPLICATE", [f["path"] for f in snap.files], result,
+        "DEDUPLICATE", [f["path"] for f in snap.files], result, snap=snap,
         numDuplicatesRemoved=n_before - n_after,
     )
     return {
@@ -210,7 +210,8 @@ def z_order_cluster(
     """
     if curve not in ("morton", "hilbert"):
         raise ValueError(f"Unknown curve {curve!r}: morton | hilbert")
-    df = table.to_df()
+    snap = table.snapshot()
+    df = table._scan(snap, snap.files)
     stats = df.agg(*(
         [F.min(F.col(c).cast("double")).alias(f"min_{c}") for c in columns
          if _is_numeric(df, c)]
@@ -249,7 +250,6 @@ def z_order_cluster(
                     dim.cast("long"), bit
                 ).bitwiseAND(F.lit(1))
 
-    snap = table.snapshot()
     n_files = target_file_count or max(1, len(snap.files))
     clustered = (
         df.withColumn("__z", z)
@@ -258,7 +258,7 @@ def z_order_cluster(
         .drop("__z")
     )
     version = table._rewrite_commit(
-        "ZORDER", [f["path"] for f in snap.files], clustered,
+        "ZORDER", [f["path"] for f in snap.files], clustered, snap=snap,
         zOrderBy=json.dumps(columns),
     )
     return {

@@ -614,9 +614,9 @@ class DeltaTable:
 
     def _stage_and_move(
         self, df: DataFrame, partition_by: list[str],
+        snap: "dsnap.Snapshot | None",
         mapping: dict[str, str] | None = None,
         max_records_per_file: int | None = None,
-        snap: "dsnap.Snapshot | None" = None,
     ) -> list[dict[str, Any]]:
         """Write df via a staging dir, move parquet files into the table
         tree with unique names, return add actions with footer stats.
@@ -631,11 +631,8 @@ class DeltaTable:
         CHECK constraints are enforced — one extra aggregation pass over
         the incoming batch, only when constraints exist.
         """
-        # one snapshot (the caller's, else the latest) feeds the protocol
-        # gate, constraint lookup, and column mapping — snapshot()
-        # replays the log each call
-        if snap is None and self.exists():
-            snap = self.snapshot()
+        # the caller's snapshot (None for a table this write creates)
+        # feeds the protocol gate, constraint lookup and column mapping
         self._assert_writer_protocol(snap)
         self._enforce_constraints(df, snap)
         if mapping is None and snap is not None:
@@ -827,8 +824,8 @@ class DeltaTable:
             ))
 
         adds = self._stage_and_move(
-            df, partition_cols, mapping=write_mapping,
-            max_records_per_file=max_records_per_file, snap=prev)
+            df, partition_cols, prev, mapping=write_mapping,
+            max_records_per_file=max_records_per_file)
         num_rows = sum(
             json.loads(a["stats"])["numRecords"] for a in adds
         )
@@ -848,7 +845,8 @@ class DeltaTable:
             + [{"add": a} for a in adds]
             + (_extra_actions or [])
         )
-        version = self._commit(prev, commit_actions, adds)
+        version = self._commit(prev, commit_actions,
+                               [a["path"] for a in adds])
         if _emit_cdc:
             self._maybe_write_cdc_for_write(df, mode, prev, version)
         return version
@@ -891,9 +889,9 @@ class DeltaTable:
     # excluded from vacuum; new DVs are spec .bin files at the table root
     DV_DIR = "_deletion_vectors"
 
-    def dv_enabled(self, snap: "dsnap.Snapshot | None" = None) -> bool:
-        conf = snap.configuration if snap is not None else self.configuration
-        return conf.get("delta.enableDeletionVectors", "").lower() == "true"
+    def dv_enabled(self, snap: "dsnap.Snapshot") -> bool:
+        return snap.configuration.get(
+            "delta.enableDeletionVectors", "").lower() == "true"
 
     def enable_deletion_vectors(self) -> int:
         return self.update_metadata({"delta.enableDeletionVectors": "true"})
@@ -1212,30 +1210,29 @@ class DeltaTable:
                 sum(r["n"] for r in rows))
 
     def _read_files(self, rel_paths: list[str],
-                    snap: "dsnap.Snapshot | None" = None) -> DataFrame:
-        """Logical rows of the files ``rel_paths`` names in ``snap``
-        (default: the latest snapshot), deletion vectors applied."""
-        if snap is None:
-            snap = self.snapshot()
+                    snap: "dsnap.Snapshot") -> DataFrame:
+        """Logical rows of the files ``rel_paths`` names in ``snap``,
+        deletion vectors applied."""
         wanted = set(rel_paths)
         return self._scan(snap, [f for f in snap.files if f["path"] in wanted])
 
     def _commit(
         self, snap: "dsnap.Snapshot | None", actions: list[dict[str, Any]],
-        adds: list[dict[str, Any]] | None = None,
+        written: list[str],
     ) -> int:
         """Commit ``actions`` as the version after ``snap``, the snapshot
         the operation read, and return that version. A commit that landed
         in between raises ConcurrencyError instead of being silently
-        written over; the data files this operation moved into the table
-        (``adds``) are removed again before it propagates."""
+        written over; the files this operation put into the table
+        (``written``: data files and deletion-vector files, relative to
+        the table root) are removed again before it propagates."""
         version = (snap.version if snap is not None else -1) + 1
         try:
             dlog.write_commit(self.path, version, actions)
         except ConcurrencyError:
-            for a in adds or []:
+            for rel in written:
                 try:
-                    os.remove(os.path.join(self.path, a["path"]))
+                    os.remove(os.path.join(self.path, rel))
                 except OSError:
                     pass
             raise
@@ -1255,17 +1252,14 @@ class DeltaTable:
         new_df: DataFrame | None,
         extra_actions: list[dict[str, Any]] | None = None,
         *,
-        snap: "dsnap.Snapshot | None" = None,
+        snap: "dsnap.Snapshot",
         **metrics: Any,
     ) -> int:
         """Copy-on-write commit: rewrite ``remove_paths`` as ``new_df``
-        (reference delete/update file rewrite, src/delta/table.ts:2214-2414),
-        against ``snap`` when the caller read one (default: the latest)."""
-        if snap is None:
-            snap = self.snapshot()
+        (reference delete/update file rewrite, src/delta/table.ts:2214-2414)
+        against ``snap``, the snapshot the caller read them from."""
         adds = (
-            self._stage_and_move(new_df, list(snap.partition_columns),
-                                 snap=snap)
+            self._stage_and_move(new_df, list(snap.partition_columns), snap)
             if new_df is not None else []
         )
         return self._commit(snap, (
@@ -1273,18 +1267,20 @@ class DeltaTable:
             + self._removes(remove_paths)
             + [{"add": a} for a in adds]
             + (extra_actions or [])
-        ), adds)
+        ), [a["path"] for a in adds])
 
     def _dv_soft_delete_actions(
         self, snap: "dsnap.Snapshot", files: list[dict[str, Any]],
         cond: Column, no_match_msg: str,
-    ) -> tuple[list[dict[str, Any]], int, DataFrame]:
+    ) -> tuple[list[dict[str, Any]], int, DataFrame, list[str]]:
         """Build the remove+add actions (with deletionVector descriptors)
         for a soft delete of the rows of ``files`` matching ``cond`` —
         WITHOUT committing. Callers compose them into a single atomic
         commit: plain delete, or delete+append for the DV update path
         (readers must never see the intermediate rows-missing state).
-        Returns (actions, n_matched, matched logical rows)."""
+        Returns (actions, n_matched, matched logical rows, the deletion-
+        vector file written, if any, for ``_commit`` to remove on a
+        conflict)."""
         if not files:
             raise NoMatchError(no_match_msg)
         mapping = self._column_mapping(snap)
@@ -1361,8 +1357,10 @@ class DeltaTable:
         inline = [b for b in blobs if len(b[1]) <= inline_max]
         filed = [b for b in blobs if len(b[1]) > inline_max]
         descriptors: dict[str, dict[str, Any]] = {}
+        written: list[str] = []
         if filed:
-            _dv_rel, descriptors = dvmod.write_dv_file(self.path, filed)
+            dv_rel, descriptors = dvmod.write_dv_file(self.path, filed)
+            written.append(dv_rel)
         for fp, blob, card in inline:
             descriptors[fp] = dvmod.inline_descriptor(blob, card)
         now = int(time.time() * 1000)
@@ -1376,7 +1374,8 @@ class DeltaTable:
                 new_add["deletionVector"] = descriptors[f["path"]]
                 new_add["dataChange"] = False
                 actions.append({"add": new_add})
-        return actions, n_matched, matched.select(*_schema_of(snap).names)
+        return (actions, n_matched, matched.select(*_schema_of(snap).names),
+                written)
 
     def _delete_with_dv(self, snap: "dsnap.Snapshot",
                         files: list[dict[str, Any]],
@@ -1386,12 +1385,13 @@ class DeltaTable:
         is rewritten each delete (it is metadata-scale); affected files
         get remove+add with a deletionVector descriptor — zero data I/O.
         """
-        dv_actions, n_matched, matched = self._dv_soft_delete_actions(
-            snap, files, cond, "delete matched no rows")
+        dv_actions, n_matched, matched, written = \
+            self._dv_soft_delete_actions(snap, files, cond,
+                                         "delete matched no rows")
         version = self._commit(snap, [dlog.commit_info_action(
             "DELETE", {"mode": "deletion-vectors"},
             numDeletedRows=n_matched,
-        )] + dv_actions)
+        )] + dv_actions, written)
         if self.cdc_enabled(snap):
             self._write_cdc(
                 matched.withColumn("_change_type", F.lit("delete")),
@@ -1474,13 +1474,14 @@ class DeltaTable:
         commit means concurrent readers never observe the intermediate
         rows-missing state and a crash between the two halves cannot
         lose the updated rows."""
-        dv_actions, n, matched = self._dv_soft_delete_actions(
+        dv_actions, n, matched, written = self._dv_soft_delete_actions(
             snap, files, cond, "update matched no rows")
         adds = self._stage_and_move(matched.withColumns(dict(assigned)),
-                                    list(snap.partition_columns), snap=snap)
+                                    list(snap.partition_columns), snap)
         version = self._commit(snap, [dlog.commit_info_action(
             "UPDATE", {"mode": "deletion-vectors"}, numUpdatedRows=n,
-        )] + dv_actions + [{"add": a} for a in adds], adds)
+        )] + dv_actions + [{"add": a} for a in adds],
+            written + [a["path"] for a in adds])
         if self.cdc_enabled(snap):
             self._write_cdc(self._update_images(matched, assigned),
                             version, snap)
@@ -1609,13 +1610,20 @@ class DeltaTable:
             affected = self._read_files(files, snap).withColumn(
                 "__tid", F.monotonically_increasing_id()
             )
+            key = F.col("__tid")
+            if n_ins:
+                # source-only rows (null __tid) each get a window key of
+                # their own, so the inserts spread over the window's
+                # partitions instead of all landing in the one for null
+                src = src.withColumn("__sid", F.monotonically_increasing_id())
+                key = F.coalesce(key, -1 - F.col("__sid"))
             joined = affected.alias("t").join(
                 src, cond, "full_outer" if n_ins else "left_outer")
             is_target = F.col("__tid").isNotNull()
             # at most one source row drives each target row (Delta MERGE
             # would error; the reference takes the first match —
             # cdc/index.ts:1969-1975); source-only rows all pass
-            w = Window.partitionBy("__tid").orderBy(F.lit(1))
+            w = Window.partitionBy(key).orderBy(F.lit(1))
             joined = joined.withColumn(
                 "__rn", F.row_number().over(w)
             ).filter(~is_target | (F.col("__rn") == 1))
@@ -1676,7 +1684,7 @@ class DeltaTable:
 
         # single commit: removes + rewritten and inserted rows
         adds = (self._stage_and_move(rows, list(snap.partition_columns),
-                                     snap=snap)
+                                     snap)
                 if rows is not None else [])
         version = self._commit(snap, (
             [dlog.commit_info_action(
@@ -1685,7 +1693,7 @@ class DeltaTable:
                 numTargetRowsInserted=n_ins,
             )]
             + self._removes(files) + [{"add": a} for a in adds]
-        ), adds)
+        ), [a["path"] for a in adds])
         if cdc is not None and self.cdc_enabled(snap):
             self._write_cdc(cdc, version, snap)
         return {"version": version, "numUpdated": n_upd,
@@ -1711,9 +1719,9 @@ class DeltaTable:
 
     # -- CDC ---------------------------------------------------------------
 
-    def cdc_enabled(self, snap: "dsnap.Snapshot | None" = None) -> bool:
-        conf = snap.configuration if snap is not None else self.configuration
-        return conf.get("delta.enableChangeDataFeed", "false") == "true"
+    def cdc_enabled(self, snap: "dsnap.Snapshot") -> bool:
+        return snap.configuration.get(
+            "delta.enableChangeDataFeed", "false") == "true"
 
     def enable_cdc(self) -> int:
         """Persist delta.enableChangeDataFeed=true (reference setCDCEnabled,
@@ -1723,23 +1731,26 @@ class DeltaTable:
                                     min_protocol=(1, 4))
 
     def _write_cdc(self, df: DataFrame, version: int,
-                   snap: "dsnap.Snapshot | None" = None) -> None:
+                   snap: "dsnap.Snapshot") -> None:
         """Write CDC records for a commit (reference writeCDCFile,
-        src/cdc/index.ts:2319-2359), in the format ``snap``'s (default:
-        the latest) configuration names."""
+        src/cdc/index.ts:2319-2359), in the format ``snap``'s
+        configuration names."""
         from deltalake_spark.delta.cdc import write_cdc_file
 
-        write_cdc_file(self, df, version, configuration=(
-            snap.configuration if snap is not None else None))
+        write_cdc_file(self, df, version, snap.configuration)
 
     def _maybe_write_cdc_for_write(
         self, df: DataFrame, mode: str,
         prev: dsnap.Snapshot | None, version: int,
     ) -> None:
-        if not self.cdc_enabled():
+        # a write keeps its table's configuration; the write that creates
+        # the table commits the first one
+        snap = prev if prev is not None and prev.metadata \
+            else self.snapshot(version)
+        if not self.cdc_enabled(snap):
             return
         records = df.withColumn("_change_type", F.lit("insert"))
-        self._write_cdc(records, version)
+        self._write_cdc(records, version, snap)
 
     def read_changes(
         self, starting_version: int = 0, ending_version: int | None = None

@@ -435,42 +435,61 @@ def test_intermittent_failures_with_retry_converge(spark, tmp_path):
         set_commit_store(real)
 
 
-@pytest.mark.parametrize("op", ["update", "delete", "merge"])
+@pytest.mark.parametrize("op,dv", [
+    pytest.param(op, dv, id=f"{op}-{'dv' if dv else 'cow'}")
+    for op, dv in [("update", False), ("update", True), ("delete", False),
+                   ("delete", True), ("merge", False), ("compact", False),
+                   ("deduplicate", False), ("zorder", False)]
+])
 def test_dml_commits_against_the_snapshot_it_read(spark, tmp_path,
-                                                  monkeypatch, op):
-    """A commit landing between a DML's file selection and its own commit
-    makes the DML raise ConcurrencyError. It must never commit on top of
-    the newer version a result computed from the older one: that lost
-    the concurrent delete's effect on the count and the update itself."""
+                                                  monkeypatch, op, dv):
+    """A commit landing between an operation's file selection and its own
+    commit makes the operation raise ConcurrencyError. It must never
+    commit on top of the newer version a result computed from the older
+    one: that lost the concurrent delete's effect on the count and the
+    update itself, and a rewrite (OPTIMIZE, DEDUPLICATE, ZORDER) put the
+    deleted rows back. The hook is the raw scan every path builds, the
+    deletion-vector ones included."""
     import os
 
+    from deltalake_spark.delta import maintenance
+
     t = DeltaTable(spark, str(tmp_path / "t"))
-    t.write(spark.createDataFrame([(i, 0) for i in range(10)],
-                                  "id long, v long"))
-    real = DeltaTable._read_files
+    for lo in (0, 5):  # two files, so compaction has work to do
+        t.write(spark.createDataFrame([(i, 0) for i in range(lo, lo + 5)],
+                                      "id long, v long").coalesce(1))
+    if dv:
+        t.enable_deletion_vectors()
+    base = t.version()
+    real = DeltaTable._keyed_scan
     raced = []
 
-    def racing_read(self, *args, **kwargs):
+    def racing_scan(self, *args, **kwargs):
         if not raced:
             raced.append(True)
             DeltaTable(spark, self.path).delete({"id": {"$lt": 5}})
         return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(DeltaTable, "_read_files", racing_read)
+    monkeypatch.setattr(DeltaTable, "_keyed_scan", racing_scan)
     run = {
         "update": lambda: t.update({"id": {"$gte": 0}}, {"v": "v + 1"}),
         "delete": lambda: t.delete({"id": {"$gte": 8}}),
         "merge": lambda: t.merge(
             spark.createDataFrame([(9, 7), (42, 1)], "id long, v long"),
             "t.id = s.id", when_matched_update="*"),
+        "compact": lambda: maintenance.compact(t),
+        "deduplicate": lambda: maintenance.deduplicate(t),
+        "zorder": lambda: maintenance.z_order_cluster(t, ["id"]),
     }[op]
     with pytest.raises(ConcurrencyError):
         run()
     assert raced
-    assert t.version() == 1  # the write and the concurrent delete only
+    assert t.version() == base + 1  # the setup and the concurrent delete
     assert sorted((r.id, r.v) for r in t.to_df().collect()) \
         == [(i, 0) for i in range(5, 10)]
-    # the losing DML's rewritten files were removed again
-    referenced = {f["path"] for v in (0, 1) for f in t.snapshot(v).files}
-    on_disk = {fn for fn in os.listdir(t.path) if fn.endswith(".parquet")}
-    assert on_disk <= referenced
+    # the losing operation's data and deletion-vector files were removed
+    referenced = {f["path"] for v in range(base + 2)
+                  for f in t.snapshot(v).files}
+    on_disk = os.listdir(t.path)
+    assert {fn for fn in on_disk if fn.endswith(".parquet")} <= referenced
+    assert len([fn for fn in on_disk if fn.endswith(".bin")]) == int(dv)
