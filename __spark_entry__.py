@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from deltalake_spark.functions.filters import translate_filter
 from deltalake_spark.functions.pipeline import apply_pipeline
+from deltalake_spark.session import read_parquet, ts_to_long_nanos
 
 
 def _be_bytes(c, nbytes: int = 4):
@@ -58,12 +59,10 @@ def _cached_centroids(spark: SparkSession, sf_dir: str, *, k: int,
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         # events.ts is TIMESTAMP(NANOS); normalize to long nanos whatever
         # type this Spark version surfaces it as (see ts_to_long_nanos)
-        from deltalake_spark.session import ts_to_long_nanos
-
         df = ts_to_long_nanos(df)
     return df
 
@@ -6971,7 +6970,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, "events.parquet")
     static_dim = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .groupBy("event_type")
         .agg(F.avg("value").alias("avg_value"))
     )

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 import os
+import platform
+import subprocess
 import sys
 import time
 
@@ -145,6 +147,28 @@ EXTRA = [
 ]
 
 
+def _run_stamp(spark) -> dict:
+    """What the run ran on: master, parallelism, driver heap, versions
+    and the checkout's git sha (``None`` outside a git checkout)."""
+    sc = spark.sparkContext
+    try:
+        sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            cwd=os.path.dirname(os.path.abspath(__file__)), check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        sha = None
+    return {
+        "master": sc.master,
+        "default_parallelism": sc.defaultParallelism,
+        "driver_memory": sc.getConf().get("spark.driver.memory", None),
+        "spark": spark.version,
+        "java": sc._jvm.java.lang.System.getProperty("java.version"),
+        "python": platform.python_version(),
+        "git_sha": sha,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
@@ -227,6 +251,7 @@ def main() -> None:
     # 2000 chars of stdout, and r3/r4's ~2.5KB line overflowed that
     # window ("parsed": null in BENCH_r03/04). Keep this line < 1900B.
     print("# detail " + json.dumps({
+        "run": _run_stamp(spark),
         "cold_queries": cold,
         "extra_queries": extra,
     }), file=sys.stderr)

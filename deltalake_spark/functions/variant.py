@@ -43,12 +43,6 @@ def try_variant_get(col: Column | str, path: str,
     return F.try_variant_get(c, path, as_type)
 
 
-def variant_schema(col: Column | str) -> Column:
-    """Per-row variant schema (debugging/inference aid)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.schema_of_variant(c)
-
-
 def shred(
     df: DataFrame,
     variant_col: str,

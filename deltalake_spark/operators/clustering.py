@@ -68,16 +68,6 @@ def quantize_to_grid(col: Column, *, scale: int = DEFAULT_SCALE) -> Column:
     )
 
 
-def _sqdist_to_literal(qcol: Column, centroid: list[int]) -> Column:
-    """Exact integer squared L2 distance to a literal centroid."""
-    lit = F.array(*[F.lit(int(v)).cast("long") for v in centroid])
-    return F.aggregate(
-        F.zip_with(qcol, lit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 _EXPR_CACHE: "dict[tuple, Column]" = {}
 
 

@@ -195,22 +195,3 @@ def cut_lineage(
         sc.setCheckpointDir(str(checkpoint_dir))
         _LAST_CKPT_DIR[app] = str(checkpoint_dir)
     return df.checkpoint(eager=eager)
-
-
-def materialize_round(
-    df: DataFrame,
-    stale: DataFrame | None,
-    *,
-    checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Back-compat per-round materialize (persist+count+release-stale
-    locally, unmanaged reliable checkpoint otherwise). New loops use
-    :class:`RoundCutter`, which adds reliable-round retention.
-    """
-    if checkpoint_dir is None:
-        df = df.persist()
-        df.count()
-        if stale is not None:
-            stale.unpersist()
-        return df, df
-    return cut_lineage(df, checkpoint_dir=checkpoint_dir, eager=True), stale

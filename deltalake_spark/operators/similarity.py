@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from deltalake_spark.operators.dedup import spread_narrow_input
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Dot product of two array columns, computed in double precision."""
@@ -288,23 +290,6 @@ _JVM_MAX_K = 64
 _PROBE_CACHE: "dict[tuple, Column]" = {}
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a narrow input up to the default parallelism.
-
-    The fixture tables are single-row-group parquet files, so every
-    scan is ONE task and the map-heavy stages of this module (literal-
-    codebook probe assignment, per-pair cosine folds) run
-    single-threaded until the first exchange — measured 17.6 s → 2.2 s
-    on the sf0.1 bitext gate. At warehouse scale the input already has
-    more partitions than cores and this is a NO-OP (same rule as
-    ``operators.dedup.spread_narrow_input``; only narrow id+vector
-    projections are ever spread, never joined/scored pair frames)."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
-
-
 def _salted_bucket_join(
     q: DataFrame, c: DataFrame, *, n_buckets: int, c_id: str,
     key: str = "__b",
@@ -426,13 +411,13 @@ def ivf_topk_join(
             "alias one side before joining so output columns are unique"
         )
     c = ivf_assign(
-        _spread(corpus.select(F.col(corpus_id).alias("__rid"),
-                              F.col(vec_col).alias("__rv"))),
+        spread_narrow_input(corpus.select(F.col(corpus_id).alias("__rid"),
+                                          F.col(vec_col).alias("__rv"))),
         centroids, vec_col="__rv", nprobe=1, bucket_col="__b",
     )
     q = ivf_assign(
-        _spread(queries.select(F.col(query_id).alias("__lid"),
-                               F.col(vec_col).alias("__lv"))),
+        spread_narrow_input(queries.select(F.col(query_id).alias("__lid"),
+                                           F.col(vec_col).alias("__lv"))),
         centroids, vec_col="__lv", nprobe=nprobe, bucket_col="__probes",
     ).withColumn("__b", F.explode("__probes")).drop("__probes")
     joined = _salted_bucket_join(
@@ -534,12 +519,12 @@ def ivf_topk_join_q(
         return (f"transform(cast(`{col}` as array<double>),"
                 f" x -> cast(round(x * {float(scale)!r}D) as bigint))")
 
-    c = _spread(corpus.select(
+    c = spread_narrow_input(corpus.select(
         F.col(corpus_id).alias("__rid"), F.col(vec_col).alias("__rv")
     )).withColumn(
         "__b", _probe_expr_q(int_centroids, qv_sql("__rv"), 1)[0])
     q = (
-        _spread(queries.select(
+        spread_narrow_input(queries.select(
             F.col(query_id).alias("__lid"), F.col(vec_col).alias("__lv")
         ))
         .withColumn("__probes",
@@ -601,10 +586,10 @@ def pairwise_topk_join(
                              num_planes=num_planes, seed=seed)
         rsk_expr = rh_sketch(F.col("__rv"), dim=dim,
                              num_planes=num_planes, seed=seed)
-    lsk = _spread(left.select(
+    lsk = spread_narrow_input(left.select(
         F.col(left_id).alias("__lid"), F.col(vec_col).alias("__lv")
     )).withColumn("__sk", lsk_expr)
-    rsk = _spread(right.select(
+    rsk = spread_narrow_input(right.select(
         F.col(right_id).alias("__rid"), F.col(vec_col).alias("__rv")
     )).withColumn("__sk", rsk_expr)
     joined = lsk.join(rsk, "__sk").withColumn(
@@ -1025,14 +1010,14 @@ def ivf_pq_topk_join(
                 f" x -> cast(round(x * {float(scale)!r}D) as bigint))")
 
     c = pq_encode(
-        _spread(corpus.select(F.col(corpus_id).alias("__rid"),
-                              F.col(vec_col).alias("__rv"))),
+        spread_narrow_input(corpus.select(F.col(corpus_id).alias("__rid"),
+                                          F.col(vec_col).alias("__rv"))),
         codebooks, vec_col="__rv", code_col="__code",
     ).withColumn(
         "__b", _probe_expr_q(int_centroids, qv_sql("__rv"), 1)[0]
     ).select("__rid", "__code", "__b")
     q = (
-        _spread(queries.select(
+        spread_narrow_input(queries.select(
             F.col(query_id).alias("__lid"), F.col(vec_col).alias("__lv")
         ))
         .withColumn("__probes",
@@ -1097,11 +1082,11 @@ def exact_sqdist_topk_join(
         return (f"transform(cast(`{col}` as array<double>),"
                 f" x -> cast(round(x * {float(scale)!r}D) as bigint))")
 
-    c = _spread(corpus.select(
+    c = spread_narrow_input(corpus.select(
         F.col(corpus_id).alias("__rid"), F.col(vec_col).alias("__rv")
     )).withColumn("__b", _probe_expr_q(int_centroids, qv_sql("__rv"), 1)[0])
     q = (
-        _spread(queries.select(
+        spread_narrow_input(queries.select(
             F.col(query_id).alias("__lid"), F.col(vec_col).alias("__lv")))
         .withColumn(
             "__probes",
@@ -1341,8 +1326,8 @@ def margin_bitext_pairs(
         ys = tgt.select(F.col(tgt_id).alias("__tid"),
                         F.col(vec_col).alias("__tv"))
         pairs = (
-            _spread(candidates.select(F.col(src_id).alias("__sid"),
-                                      F.col(tgt_id).alias("__tid")))
+            spread_narrow_input(candidates.select(
+                F.col(src_id).alias("__sid"), F.col(tgt_id).alias("__tid")))
             .join(xs, "__sid").join(ys, "__tid")
             .select("__sid", "__tid", cos_micro)
         )
@@ -1351,13 +1336,13 @@ def margin_bitext_pairs(
             raise ValueError(
                 "int_centroids is required for the exhaustive pass "
                 "(pass candidates=... for the IVF scale path)")
-        y = _spread(tgt.select(
+        y = spread_narrow_input(tgt.select(
             F.col(tgt_id).alias("__tid"), F.col(vec_col).alias("__tv")
         )).withColumn(
             "__b", _probe_expr_q(int_centroids, qv_sql("__tv"), 1)[0])
         x = (
-            _spread(src.select(F.col(src_id).alias("__sid"),
-                               F.col(vec_col).alias("__sv")))
+            spread_narrow_input(src.select(F.col(src_id).alias("__sid"),
+                                           F.col(vec_col).alias("__sv")))
             .withColumn("__probes",
                         _probe_expr_q(int_centroids, qv_sql("__sv"),
                                       len(int_centroids)))
@@ -1476,8 +1461,9 @@ def hard_triplet_mine(
             F.col(label_col).alias("__clb"),
             F.col(vec_col).alias("__cv"))
         pairs = (
-            _spread(candidates.select(F.col(anchor_id).alias("__aid"),
-                                      F.col(corpus_id).alias("__cid")))
+            spread_narrow_input(candidates.select(
+                F.col(anchor_id).alias("__aid"),
+                F.col(corpus_id).alias("__cid")))
             .join(av, "__aid").join(cv, "__cid")
             .filter(F.col("__aid") != F.col("__cid"))
             .select(*pair_cols)
@@ -1487,14 +1473,14 @@ def hard_triplet_mine(
             raise ValueError(
                 "int_centroids is required for the exhaustive pass "
                 "(pass candidates=... for the IVF scale path)")
-        c = _spread(corpus.select(
+        c = spread_narrow_input(corpus.select(
             F.col(corpus_id).alias("__cid"),
             F.col(label_col).alias("__clb"),
             F.col(vec_col).alias("__cv"),
         )).withColumn(
             "__b", _probe_expr_q(int_centroids, qv_sql("__cv"), 1)[0])
         a = (
-            _spread(anchors.select(
+            spread_narrow_input(anchors.select(
                 F.col(anchor_id).alias("__aid"),
                 F.col(label_col).alias("__alb"),
                 F.col(vec_col).alias("__av")))

@@ -43,13 +43,6 @@ def stopword_ratio(text_col: Column, lang: str) -> Column:
     return hits / F.greatest(F.size(toks), F.lit(1))
 
 
-def language_scores(text_col: Column) -> Column:
-    """Struct of per-language stopword-ratio scores."""
-    return F.struct(
-        *[stopword_ratio(text_col, lang).alias(lang) for lang in _LANG_MARKERS]
-    )
-
-
 def language_id(text_col: Column) -> Column:
     """Argmax language over the marker scores ('und' when all zero).
 

@@ -30,7 +30,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: paths a scan may name before Spark lists them with a job (see above)
 LISTING_THRESHOLD = 100_000
@@ -97,8 +98,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
                 str(LISTING_THRESHOLD))
-        # events.parquet carries TIMESTAMP(NANOS); read as long (ns since
-        # epoch) instead of failing — convert explicitly where needed
+        # events.parquet carries TIMESTAMP(NANOS). Spark 4.1 reads it as
+        # timestamp_ntz truncated to microseconds whether this legacy
+        # conf is true or false (older versions honored it and read
+        # long nanos); ts_to_long_nanos normalizes either form
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
@@ -170,6 +173,62 @@ def ts_to_long_nanos(df, col: str = "ts"):
     return df.withColumn(col, expr)
 
 
+#: absolute path -> (content fingerprint, schema); one entry per path,
+#: replaced when the content changes
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(mtime_ns, size)`` of a file; for a directory, the sorted
+    ``(relative path, mtime_ns, size)`` of every file under it, so an
+    added, removed or rewritten file changes it, partition subdirectories
+    included."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_mtime_ns, st.st_size)
+    entries = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            p = os.path.join(root, name)
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:  # removed while we listed
+                continue
+            entries.append((os.path.relpath(p, path), st.st_mtime_ns,
+                            st.st_size))
+    return tuple(sorted(entries))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of a parquet file or directory, inferred once per content.
+
+    Inference starts one Spark job per call (~50-100 ms); a scan given
+    the schema starts none. The cache holds only the ``StructType``,
+    never a DataFrame: each read still builds its own plan, so two
+    scans of one table (a self-join) keep distinct attribute ids.
+
+    The file content is the whole key. The one session conf that could
+    change an inferred fixture type, ``nanosAsLong``, does not on Spark
+    4.1: ``events.ts`` (TIMESTAMP(NANOS)) infers as ``timestamp_ntz``
+    with it on or off, and a read pinned to that schema returns the
+    same values.
+    """
+    path = os.path.abspath(path)
+    fp = _fingerprint(path)
+    hit = _SCHEMA_CACHE.get(path)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _SCHEMA_CACHE[path] = (fp, schema)
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema from
+    :func:`parquet_schema`, so a repeated read starts no Spark job."""
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):
     """Load fixture tables as temp views + return dict of DataFrames."""
     tables = {}
@@ -178,7 +237,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str):
         "events documents embeddings"
     ).split()
     for name in all_names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         if name == "events":
             df = ts_to_long_nanos(df)
         df.createOrReplaceTempView(name)

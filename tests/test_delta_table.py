@@ -4,6 +4,7 @@ time-travel.test.ts:88-801) and unit delta tests."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -140,6 +141,34 @@ def test_delete_rewrites_only_affected_files(spark, tmp_table):
     files_after = {f["path"] for f in tmp_table.snapshot().files}
     untouched = files_before & files_after
     assert untouched, "file without matches must survive the rewrite"
+
+
+@pytest.mark.parametrize("dtype", ["DECIMAL(10,2)", "DECIMAL(30,4)"])
+def test_decimal_column_writes_reads_back_and_range_deletes(
+        spark, tmp_table, dtype):
+    """Spark stores a DECIMAL of precision ≤ 18 as an integer whose footer
+    stats pyarrow cannot decode: the file records only the null count.
+    A wider one is fixed-length bytes that pyarrow reads as ``Decimal``:
+    its bounds become JSON numbers."""
+    from decimal import Decimal
+
+    tmp_table.write(spark.sql(
+        f"SELECT CAST(1.25 AS {dtype}) AS price, 1L AS id"
+        f" UNION ALL SELECT CAST(3.50 AS {dtype}), 2L").coalesce(1))
+    tmp_table.write(spark.sql(f"SELECT CAST(7.75 AS {dtype}) AS price, 3L AS id"))
+    stats = [json.loads(f["stats"]) for f in tmp_table.snapshot().files]
+    assert sorted(s["nullCount"]["price"] for s in stats) == [0, 0]
+    bounds = sorted((s["minValues"].get("price"), s["maxValues"].get("price"))
+                    for s in stats)
+    if dtype == "DECIMAL(10,2)":
+        assert bounds == [(None, None), (None, None)]
+    else:
+        assert bounds == [(1.25, 3.5), (7.75, 7.75)]
+    assert sorted((r.id, r.price) for r in tmp_table.to_df().collect()) == [
+        (1, Decimal("1.25")), (2, Decimal("3.50")), (3, Decimal("7.75"))]
+    res = tmp_table.delete({"price": {"$gte": 3}})
+    assert res["numDeletedRows"] == 2
+    assert [r.id for r in tmp_table.to_df().collect()] == [1]
 
 
 def test_update(spark, tmp_table):

@@ -1,8 +1,14 @@
-"""ts_to_long_nanos: the read-boundary normalization every time-domain
+"""Session helpers.
+
+ts_to_long_nanos: the read-boundary normalization every time-domain
 query depends on. Must be correct for long / timestamp / timestamp_ntz
 inputs and independent of the session timezone (the driver constructs
 its own SparkSession; a tz-sensitive conversion would silently shift
-every event time by the host offset)."""
+every event time by the host offset).
+
+parquet_schema / read_parquet: a fixture's schema is inferred once per
+file content, so a warm gate build starts no Spark job, and a rewritten
+file or directory is seen at once."""
 
 import os
 
@@ -11,7 +17,9 @@ import pytest
 
 from deltalake_spark.session import (
     default_driver_memory,
+    parquet_schema,
     physical_gib,
+    read_parquet,
     ts_to_long_nanos,
 )
 
@@ -95,3 +103,59 @@ def test_test_session_heap_is_machine_derived(spark):
             or os.environ.get("SPARK_DRIVER_MEM")
             or default_driver_memory(cores, physical_gib()))
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+def test_warm_headline_build_starts_no_spark_job(spark, sf_dir, count_jobs):
+    """Once each fixture's schema is known, building a headline gate
+    resolves its scans without inference. The exception is
+    delta_table_lifecycle, whose write, delete and update are the gate."""
+    import __spark_entry__ as entry
+    import bench
+
+    qs = entry.queries()
+    for name in bench.HEADLINE:  # warm build: schemas, centroids
+        qs[name](spark, sf_dir)
+    jobs = {name: count_jobs(lambda: qs[name](spark, sf_dir))[1]
+            for name in bench.HEADLINE}
+    assert jobs.pop("delta_table_lifecycle") <= 7
+    assert {n: j for n, j in jobs.items() if j} == {}
+
+
+def test_rewritten_parquet_file_gets_a_fresh_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"id": [1, 2, 3]}), path)
+    assert read_parquet(spark, path).columns == ["id"]
+    pq.write_table(pa.table({"id": [4, 5], "s": ["a", "b"]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["id", "s"]
+    assert sorted(tuple(r) for r in df.collect()) == [(4, "a"), (5, "b")]
+
+
+def test_directory_with_an_added_file_gets_a_fresh_schema(spark, tmp_path,
+                                                          count_jobs):
+    d = str(tmp_path / "d")
+    spark.range(3).coalesce(1).write.parquet(d)
+    assert parquet_schema(spark, d).fieldNames() == ["id"]
+    _, jobs = count_jobs(lambda: read_parquet(spark, d))
+    assert jobs == 0  # unchanged directory: cached
+    spark.range(3, 5).coalesce(1).write.mode("append").parquet(d)
+    df, jobs = count_jobs(lambda: read_parquet(spark, d))
+    assert jobs > 0  # added file: inferred again
+    assert df.count() == 5
+    spark.sql("SELECT id, id * 2 AS v FROM range(2)").coalesce(1) \
+        .write.mode("overwrite").parquet(d)
+    assert parquet_schema(spark, d).fieldNames() == ["id", "v"]
+
+
+def test_bench_stamp_says_what_it_ran_on(spark):
+    import bench
+
+    stamp = bench._run_stamp(spark)
+    assert stamp["master"] == spark.sparkContext.master
+    assert stamp["default_parallelism"] >= 1
+    assert stamp["spark"] == spark.version
+    assert stamp["java"] and stamp["python"] and stamp["driver_memory"]
+    assert stamp["git_sha"] is None or len(stamp["git_sha"]) == 40
